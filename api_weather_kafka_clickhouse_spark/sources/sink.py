@@ -23,6 +23,9 @@ native warehouse is parquet.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -111,27 +114,88 @@ def jdbc_insert(df: DataFrame, url: str, table: str, properties: dict | None = N
     writer.save()
 
 
-def _leaf_partition_dirs(fs, jvm, base: str) -> list:  # noqa: ANN001 (JVM objects)
-    """Directories under ``base`` that directly hold data files — the
-    Hive leaf partitions, at any nesting depth (event_month=N, or
-    batch_id=N/event_month=M from write_fact_batch)."""
-    leaves = []
-    stack = [jvm.org.apache.hadoop.fs.Path(base)]
+class _Leaf(NamedTuple):
+    path: str  # scheme-qualified leaf directory
+    rel: str  # directory relative to the table root
+    parts: list[tuple[str, str]]  # Hive (name, value) pairs, outermost first
+    files: list  # data-file FileStatus objects (JVM)
+
+
+def _leaves(spark: SparkSession, path: str) -> Iterator[_Leaf]:
+    """The Hive leaf partitions of the table at ``path``: directories
+    that directly hold data files, at any nesting depth (event_month=M
+    from write_fact, batch_id=N/event_month=M from write_fact_batch).
+    Yields nothing for an absent table. The one walk every maintenance
+    verb below shares."""
+    from ..streaming.store import hadoop_fs
+
+    fs, base = hadoop_fs(spark, path)
+    if not fs.exists(base):
+        return
+    # listStatus returns scheme-qualified paths ("file:/..."); qualify
+    # the base the same way so relative names slice correctly
+    base = fs.makeQualified(base)
+    prefix = len(base.toString())
+    stack = [base]
     while stack:
-        p = stack.pop()
-        subdirs, has_data = [], False
-        for s in fs.listStatus(p):
-            name = s.getPath().getName()
-            if name.startswith(("_", ".")):
+        d = stack.pop()
+        files = []
+        for st in fs.listStatus(d):
+            if st.getPath().getName().startswith(("_", ".")):
                 continue
-            if s.isDirectory():
-                subdirs.append(s.getPath())
+            if st.isDirectory():
+                stack.append(st.getPath())
             else:
-                has_data = True
-        if has_data:
-            leaves.append(p)
-        stack.extend(subdirs)
-    return leaves
+                files.append(st)
+        if files:
+            leaf = d.toString()
+            rel = leaf[prefix:].lstrip("/")
+            parts = [tuple(seg.split("=", 1)) for seg in rel.split("/") if "=" in seg]
+            yield _Leaf(leaf, rel, parts, files)
+
+
+def _rewrite_leaves(spark: SparkSession, leaves: Iterable[_Leaf], match, keep) -> dict[str, int]:
+    """The per-leaf mutation loop behind delete_fact and upsert_fact.
+
+    Each leaf is read directly, which loses the Hive partition
+    columns, so they are re-derived from the dir path as constants
+    (predicates like event_month = N then resolve). ``match(stored)``
+    selects the rows the verb removes; only a leaf where it selects
+    at least one row is rewritten, to ``keep(stored)`` with the
+    partition columns dropped again (the layout carries them) and
+    re-sorted on the table sort key, through the shared crash-safe
+    tmp/marker/aside swap. Returns {relative partition dir: rows
+    matched} for the rewritten leaves."""
+    from ..streaming.store import crash_safe_rewrite
+
+    rewritten: dict[str, int] = {}
+    for leaf in leaves:
+        consts = {
+            name: F.lit(int(value)) if value.lstrip("-").isdigit() else F.lit(value)
+            for name, value in leaf.parts
+        }
+
+        # write_tmp runs inside this iteration, after crash recovery,
+        # so it re-reads the leaf rather than reuse the counted frame
+        def stored() -> DataFrame:
+            return spark.read.parquet(leaf.path).withColumns(consts)
+
+        n = match(stored()).count()
+        if n == 0:
+            continue
+
+        def _write_kept(tmp: str) -> None:
+            (
+                keep(stored())
+                .drop(*consts)
+                .sortWithinPartitions(*SORT_KEY)
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
+
+        if crash_safe_rewrite(spark, leaf.path, _write_kept):
+            rewritten[leaf.rel] = n
+    return rewritten
 
 
 def optimize_fact(
@@ -164,40 +228,23 @@ def optimize_fact(
 
     from ..streaming.store import crash_safe_rewrite
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
-    if not fs.exists(base):
-        return {}
-    # listStatus returns scheme-qualified paths ("file:/..."); qualify
-    # the base the same way so relative names slice correctly
-    base_q = fs.makeQualified(base).toString()
     merged: dict[str, int] = {}
-    for leaf in _leaf_partition_dirs(fs, jvm, path):
-        files = [
-            s
-            for s in fs.listStatus(leaf)
-            if not s.isDirectory() and not s.getPath().getName().startswith(("_", "."))
-        ]
-        total = sum(s.getLen() for s in files)
-        target_n = max(1, math.ceil(total / target_file_bytes))
-        if len(files) <= target_n:
+    for leaf in _leaves(spark, path):
+        target_n = max(1, math.ceil(sum(st.getLen() for st in leaf.files) / target_file_bytes))
+        if len(leaf.files) <= target_n:
             continue
-        leaf_str = leaf.toString()
 
-        def _write_merged(tmp: str, _leaf: str = leaf_str, _n: int = target_n) -> None:
+        def _write_merged(tmp: str) -> None:
             (
-                spark.read.parquet(_leaf)
-                .coalesce(_n)
+                spark.read.parquet(leaf.path)
+                .coalesce(target_n)
                 .sortWithinPartitions(*SORT_KEY)
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
 
-        if crash_safe_rewrite(spark, leaf_str, _write_merged):
-            rel = leaf_str[len(base_q) :].lstrip("/")
-            merged[rel] = len(files)
+        if crash_safe_rewrite(spark, leaf.path, _write_merged):
+            merged[leaf.rel] = len(leaf.files)
     return merged
 
 
@@ -209,27 +256,22 @@ def delete_fact(spark: SparkSession, path: str, predicate) -> dict[str, int]:
     ONLY the leaf partitions that contain matches. Returns
     {relative partition dir: rows deleted}.
 
-    Two-phase, scan-bounded: phase 1 counts matches per partition in
-    one pruned scan (the predicate reaches the parquet footers, so
-    partitions the min/max stats exclude are never read); phase 2
-    rewrites just the matching partitions — read, anti-filter,
-    re-sort on the table sort key, write — through the shared
-    crash-safe tmp/marker/aside swap (streaming/store.
-    crash_safe_rewrite), so at every instant a complete copy of each
-    partition exists and interrupted runs converge on re-invocation.
-    Untouched partitions keep their files byte-identical — at 100 TB
-    a delete of one user's rows costs the partitions that user
-    touched, not a table rewrite. QUIESCENT POINT ONLY, like every
-    in-place rewrite here.
+    Two-phase per leaf (_rewrite_leaves): count the matches (the
+    predicate reaches the parquet footers, so row groups the min/max
+    stats exclude are never read), then rewrite just the matching
+    leaves — read, anti-filter, re-sort on the table sort key, write —
+    through the shared crash-safe tmp/marker/aside swap
+    (streaming/store.crash_safe_rewrite), so at every instant a
+    complete copy of each partition exists and interrupted runs
+    converge on re-invocation. Untouched partitions keep their files
+    byte-identical — at 100 TB a delete of one user's rows costs the
+    partitions that user touched, not a table rewrite. QUIESCENT
+    POINT ONLY, like every in-place rewrite here.
 
     Deleting every row of a partition leaves an empty partition dir
     (a valid zero-row parquet table), mirroring ClickHouse's empty
     part rather than surprising readers with a vanished directory.
     """
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from ..streaming.store import crash_safe_rewrite
-
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     # SQL DELETE semantics: a predicate evaluating NULL means NOT
     # matched — the row is KEPT. A bare filter(~cond) would silently
@@ -238,48 +280,18 @@ def delete_fact(spark: SparkSession, path: str, predicate) -> dict[str, int]:
     # here: NULL -> FALSE before both the match count and the keep
     # side use it.
     cond = F.coalesce(cond, F.lit(False))
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
-    if not fs.exists(base):
-        return {}
-    base_q = fs.makeQualified(base).toString()
-    deleted: dict[str, int] = {}
-    for leaf in _leaf_partition_dirs(fs, jvm, path):
-        leaf_str = leaf.toString()
-        rel = fs.makeQualified(leaf).toString()[len(base_q) :].lstrip("/")
-        # a direct leaf read loses the Hive partition columns; re-derive
-        # them from the dir path so predicates like event_month = N
-        # resolve (they are constants per leaf), then drop them before
-        # writing back — the layout carries them
-        part_cols = [
-            seg.split("=", 1) for seg in rel.split("/") if "=" in seg
-        ]
+    return _rewrite_leaves(
+        spark,
+        _leaves(spark, path),
+        match=lambda stored: stored.filter(cond),
+        keep=lambda stored: stored.filter(~cond),
+    )
 
-        def _with_parts(df: DataFrame) -> DataFrame:
-            for name, value in part_cols:
-                lit = F.lit(int(value)) if value.lstrip("-").isdigit() else F.lit(value)
-                df = df.withColumn(name, lit)
-            return df
 
-        n = _with_parts(spark.read.parquet(leaf_str)).filter(cond).count()
-        if n == 0:
-            continue
-
-        def _write_kept(tmp: str, _leaf: str = leaf_str) -> None:
-            (
-                _with_parts(spark.read.parquet(_leaf))
-                .filter(~cond)
-                .drop(*[name for name, _ in part_cols])
-                .sortWithinPartitions(*SORT_KEY)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-
-        if crash_safe_rewrite(spark, leaf_str, _write_kept):
-            deleted[rel] = n
-    return deleted
+# batch_id of the rows upsert_fact appends to a write_fact_batch
+# warehouse: stream batch ids start at 0, so no write_fact_batch
+# dynamic overwrite ever replaces this partition.
+UPSERT_BATCH_ID = -1
 
 
 def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[str, ...]) -> dict[str, int]:
@@ -287,7 +299,7 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
     ReplacingMergeTree write path: rows in ``updates`` REPLACE any
     stored rows sharing their ``keys``, and new keys append. Returns
     {relative partition dir: rows replaced} for the rewritten
-    partitions (the append itself lands via write_fact).
+    partitions (the append itself is not counted).
 
     Deterministic two-step composition, COLLECT-FREE on the key set
     (the update batch never materializes on the driver, so a caller
@@ -302,10 +314,13 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
        (tiny) probe-positive slice gets an EXACT left-anti join
        against the distributed key set to rescue false positives.
        Only partitions with >=1 exact match rewrite, through the
-       shared crash-safe tmp/marker/aside swap.
-    2. APPEND the update rows month-partitioned and sort-keyed
-       (write_fact) — at most one file set per touched month, which
-       optimize_fact folds in at the next maintenance point.
+       shared crash-safe tmp/marker/aside swap (_rewrite_leaves).
+    2. APPEND the update rows sort-keyed, in the table's own layout:
+       month-partitioned (write_fact) for a write_fact table, and
+       under ``batch_id=UPSERT_BATCH_ID`` then month for a
+       write_fact_batch (micro-batch) warehouse — at most one file set
+       per touched month, which optimize_fact folds in at the next
+       maintenance point.
 
     Rows whose stored key columns contain NULL are never replaced
     (SQL MERGE equality semantics: NULL matches nothing).
@@ -319,7 +334,6 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
     twin; streaming/scd2_ingest the incremental one).
     """
     from ..operators.bloom import _bits_literal, bloom_member, build_bloom_bits
-    from ..streaming.store import crash_safe_rewrite
 
     # canonical join-key fingerprint: unit-separator-joined string
     # forms; concat_ws never yields NULL, so the probe is always a
@@ -328,58 +342,29 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
 
     key_df = updates.select(*keys).distinct().persist()
     try:
-        if key_df.isEmpty():
-            replaced: dict[str, int] = {}
+        leaves = list(_leaves(spark, path))
+        replaced: dict[str, int] = {}
+        if not key_df.isEmpty():
+            probe = bloom_member(gram, _bits_literal(build_bloom_bits(key_df.select(gram.alias("gram")))))
+            replaced = _rewrite_leaves(
+                spark,
+                leaves,
+                match=lambda stored: stored.filter(probe).join(key_df, list(keys), "left_semi"),
+                keep=lambda stored: stored.filter(~probe).unionByName(
+                    stored.filter(probe).join(key_df, list(keys), "left_anti")
+                ),
+            )
+        if any(name == "batch_id" for leaf in leaves for name, _ in leaf.parts):
+            (
+                with_month(updates)
+                .withColumn("batch_id", F.lit(UPSERT_BATCH_ID))
+                .sortWithinPartitions(*SORT_KEY)
+                .write.mode("append")
+                .partitionBy("batch_id", MONTH_COL)
+                .parquet(path)
+            )
         else:
-            bits = _bits_literal(build_bloom_bits(key_df.select(gram.alias("gram"))))
-            probe = bloom_member(gram, bits)
-
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            base = jvm.org.apache.hadoop.fs.Path(path)
-            fs = base.getFileSystem(conf)
-            replaced = {}
-            if fs.exists(base):
-                base_q = fs.makeQualified(base).toString()
-                for leaf in _leaf_partition_dirs(fs, jvm, path):
-                    leaf_str = leaf.toString()
-                    rel = fs.makeQualified(leaf).toString()[len(base_q):].lstrip("/")
-                    part_cols = [seg.split("=", 1) for seg in rel.split("/") if "=" in seg]
-
-                    def _with_parts(df: DataFrame) -> DataFrame:
-                        for name, value in part_cols:
-                            lit = (
-                                F.lit(int(value))
-                                if value.lstrip("-").isdigit()
-                                else F.lit(value)
-                            )
-                            df = df.withColumn(name, lit)
-                        return df
-
-                    stored = _with_parts(spark.read.parquet(leaf_str))
-                    n = (
-                        stored.filter(probe)
-                        .join(key_df, list(keys), "left_semi")
-                        .count()
-                    )
-                    if n == 0:
-                        continue
-
-                    def _write_kept(tmp: str, _leaf: str = leaf_str, _wp=_with_parts, _pc=part_cols) -> None:
-                        st = _wp(spark.read.parquet(_leaf))
-                        kept = st.filter(~probe).unionByName(
-                            st.filter(probe).join(key_df, list(keys), "left_anti")
-                        )
-                        (
-                            kept.drop(*[name for name, _ in _pc])
-                            .sortWithinPartitions(*SORT_KEY)
-                            .write.mode("overwrite")
-                            .parquet(tmp)
-                        )
-
-                    if crash_safe_rewrite(spark, leaf_str, _write_kept):
-                        replaced[rel] = n
-        write_fact(updates, path)
+            write_fact(updates, path)
         return replaced
     finally:
         key_df.unpersist()
@@ -412,16 +397,12 @@ def ttl_expire(spark: SparkSession, path: str, older_than: str) -> dict[str, obj
     ``{"dropped": [rel dirs], "boundary": {rel dir: rows deleted}}``.
     QUIESCENT POINT ONLY, like every in-place rewrite here.
     """
-    from ..streaming.store import _require_atomic_rename
+    from ..streaming.store import _require_atomic_rename, hadoop_fs
 
     cutoff_month = int(older_than[:7].replace("-", ""))
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
+    fs, base = hadoop_fs(spark, path)
     if not fs.exists(base):
         return {"dropped": [], "boundary": {}}
-    base_q = fs.makeQualified(base).toString()
 
     # recovery: finish any interrupted drop (the rename committed the
     # drop; the delete just reclaims space)
@@ -438,22 +419,18 @@ def ttl_expire(spark: SparkSession, path: str, older_than: str) -> dict[str, obj
     for t in trash:
         fs.delete(t, True)
 
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     dropped: list[str] = []
-    for leaf in _leaf_partition_dirs(fs, jvm, path):
-        leaf_q = fs.makeQualified(leaf).toString()
-        rel = leaf_q[len(base_q):].lstrip("/")
-        month = None
-        for seg in rel.split("/"):
-            if seg.startswith(f"{MONTH_COL}="):
-                month = int(seg.split("=", 1)[1])
-        if month is None or month >= cutoff_month:
+    for leaf in _leaves(spark, path):
+        month = dict(leaf.parts).get(MONTH_COL)
+        if month is None or int(month) >= cutoff_month:
             continue
-        _require_atomic_rename(fs, leaf_q)
-        aside = jvm.org.apache.hadoop.fs.Path(leaf_q + TTL_TRASH_SUFFIX)
-        if not fs.rename(leaf, aside):
-            raise OSError(f"ttl_expire: rename failed for {leaf_q}")
+        _require_atomic_rename(fs, leaf.path)
+        aside = Path(leaf.path + TTL_TRASH_SUFFIX)
+        if not fs.rename(Path(leaf.path), aside):
+            raise OSError(f"ttl_expire: rename failed for {leaf.path}")
         fs.delete(aside, True)
-        dropped.append(rel)
+        dropped.append(leaf.rel)
 
     boundary = delete_fact(
         spark,
@@ -479,42 +456,25 @@ def table_parts(spark: SparkSession, path: str) -> DataFrame:
     equivalent runs against the catalog/manifest layer; the contract
     (partition -> files/bytes/rows) is the same.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
     rows: list[tuple] = []
-    if fs.exists(base):
-        base_q = fs.makeQualified(base).toString()
-        local = base_q.startswith("file:")
-        for leaf in _leaf_partition_dirs(fs, jvm, path):
-            leaf_q = fs.makeQualified(leaf).toString()
-            rel = leaf_q[len(base_q):].lstrip("/")
-            files = [
-                s
-                for s in fs.listStatus(leaf)
-                if not s.isDirectory()
-                and not s.getPath().getName().startswith(("_", "."))
-            ]
-            n_rows: int | None = None
-            if local:
-                import pyarrow.parquet as pq
+    for leaf in _leaves(spark, path):
+        n_rows: int | None = None
+        if leaf.path.startswith("file:"):
+            import pyarrow.parquet as pq
 
-                n_rows = sum(
-                    pq.ParquetFile(
-                        s.getPath().toUri().getPath()
-                    ).metadata.num_rows
-                    for s in files
-                )
-            rows.append(
-                (
-                    rel,
-                    len(files),
-                    sum(s.getLen() for s in files),
-                    n_rows,
-                    max((s.getModificationTime() for s in files), default=0) // 1000,
-                )
+            n_rows = sum(
+                pq.ParquetFile(st.getPath().toUri().getPath()).metadata.num_rows
+                for st in leaf.files
             )
+        rows.append(
+            (
+                leaf.rel,
+                len(leaf.files),
+                sum(st.getLen() for st in leaf.files),
+                n_rows,
+                max(st.getModificationTime() for st in leaf.files) // 1000,
+            )
+        )
     return spark.createDataFrame(
         rows,
         "partition string, n_files bigint, bytes bigint, rows bigint, "

@@ -47,11 +47,9 @@ from .store import (
     append_partition,
     checkpoint_run_id,
     compact_tables,
-    ensure_store_scheme,
     guard_replay_after_compaction,
-    read_high_water,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
     write_high_water,
 )
 
@@ -85,8 +83,7 @@ def agg_state_batch(
     """foreachBatch body: write this batch's partial states as its own
     store partition. Never reads the parts table."""
     spark = events.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, AGG_SCHEME, ("parts",))
+    open_scheme_store(spark, store_dir, AGG_SCHEME, ("parts",), run_id)
     guard_replay_after_compaction(spark, store_dir, "parts", batch_id, "agg-state")
 
     partial = events.groupBy(
@@ -101,9 +98,7 @@ def agg_state_batch(
         F.hll_sketch_agg("user_id", UNIQ_LG_K).alias("uniq_state"),
     )
     append_partition(partial, os.path.join(store_dir, "parts"), batch_id)
-    high = read_high_water(spark, store_dir)
-    if high is None or batch_id > high:
-        write_high_water(spark, store_dir, batch_id)
+    write_high_water(spark, store_dir, batch_id)
 
 
 def read_agg(spark: SparkSession, store_dir: str) -> DataFrame:

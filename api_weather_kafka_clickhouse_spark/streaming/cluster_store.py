@@ -34,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import merge_components
-from .store import COMPACT_MARKER, _require_atomic_rename, fs_exists
+from .store import COMPACT_MARKER, _require_atomic_rename, fs_exists, hadoop_fs
 
 _LABEL_SCHEMA = "doc_id bigint, canonical_id bigint"
 
@@ -58,22 +58,14 @@ def update_labels(spark: SparkSession, labels_dir: str, pairs: DataFrame) -> Non
     _swap_in(spark, os.path.join(labels_dir, "labels"), updated)
 
 
-def _jvm_paths(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), jvm, p
-
-
 def _recover(spark: SparkSession, path: str) -> None:
     """Entry-time recovery of a crashed swap — the miniature of
     store.compact_tables' protocol (single table, no aside: the swap
     below deletes live only after tmp is marker-complete)."""
-    fs, jvm, p_live = _jvm_paths(spark, path)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(path + "__swap_tmp")
-    p_marker = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(path + "__swap_tmp", COMPACT_MARKER)
-    )
+    fs, p_live = hadoop_fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    p_tmp = Path(path + "__swap_tmp")
+    p_marker = Path(os.path.join(path + "__swap_tmp", COMPACT_MARKER))
     if fs.exists(p_tmp):
         if fs.exists(p_marker):
             # the marker proves tmp fully materialized, and tmp is
@@ -100,11 +92,12 @@ def _swap_in(spark: SparkSession, path: str, df: DataFrame) -> None:
     complete" premise no longer holds — so the same guard refuses
     object-store schemes here too (the pipeline runs this swap every
     micro-batch, not just at compaction points)."""
-    fs, jvm, p_live = _jvm_paths(spark, path)
+    fs, p_live = hadoop_fs(spark, path)
     _require_atomic_rename(fs, path)
     tmp = path + "__swap_tmp"
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_marker = jvm.org.apache.hadoop.fs.Path(os.path.join(tmp, COMPACT_MARKER))
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    p_tmp = Path(tmp)
+    p_marker = Path(os.path.join(tmp, COMPACT_MARKER))
     df.write.mode("overwrite").parquet(tmp)
     fs.create(p_marker, True).close()
     if fs.exists(p_live):

@@ -75,16 +75,15 @@ from .store import (
     append_partition,
     checkpoint_run_id,
     compact_tables,
-    ensure_store_scheme,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
 )
 
 SIG_SIM_THRESHOLD = 0.8
 
 # Identifies every parameter that makes stored signatures comparable
 # to new ones; bump whenever signing changes incompatibly (see
-# store.ensure_store_scheme). "nocap" records the round-6
+# store.open_scheme_store). "nocap" records the
 # batch-independent signing fix — a store of capped signatures must
 # fail loud, not silently miss near-dups across the boundary.
 SIG_SCHEME = "minhash64-bands16x4-shingle3-nocap"
@@ -157,8 +156,7 @@ def dedup_ingest_batch(
         return now
 
     spark = batch.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, SIG_SCHEME, ("sigs", "bands", "shorts"))
+    open_scheme_store(spark, store_dir, SIG_SCHEME, ("sigs", "bands", "shorts"), run_id)
 
     # collapse duplicate doc_ids deterministically before anything
     # else (see module docstring): keep the lexicographically-

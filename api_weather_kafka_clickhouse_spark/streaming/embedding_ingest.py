@@ -62,12 +62,11 @@ from .store import (
     append_partition,
     checkpoint_run_id,
     compact_tables,
-    ensure_store_scheme,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
 )
 
-# Scheme record for ensure_store_scheme — band keys from a FIXED
+# Scheme record for open_scheme_store — band keys from a FIXED
 # 16-hyperplane SRP set over 64-dim vectors, exact-cosine admission;
 # a store written under different planes/dims must fail loud.
 VEC_SCHEME = "srp-planes16-dim64-cosine"
@@ -115,8 +114,7 @@ def embedding_ingest_batch(
     from pyspark.sql import Window
 
     spark = batch.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, VEC_SCHEME, ("vecs", "bands"))
+    open_scheme_store(spark, store_dir, VEC_SCHEME, ("vecs", "bands"), run_id)
 
     w = Window.partitionBy("vec_id").orderBy("vec")
     vecs = (

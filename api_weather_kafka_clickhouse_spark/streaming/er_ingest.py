@@ -71,10 +71,9 @@ from .store import (
     COMPACTED_BATCH_ID,
     append_partition,
     checkpoint_run_id,
-    ensure_store_scheme,
     fs_exists,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
 )
 
 # Name chars riding the block key beside nation (ER_BLOCK_PREFIX,
@@ -204,8 +203,7 @@ def er_ingest_batch(
         return now
 
     spark = batch.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, ER_SCHEME, ("blocks", "attrs"))
+    open_scheme_store(spark, store_dir, ER_SCHEME, ("blocks", "attrs"), run_id)
 
     # collapse duplicate rec_ids deterministically (producer retries):
     # keep the lexicographically-smallest (name, nation, bal) tuple.

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .store import crash_safe_rewrite, hadoop_fs
+
 ROLLUP_KEYS = ("event_date", "city_name")
 
 
@@ -71,12 +73,6 @@ def start_rollup(
     return writer.start()
 
 
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
 def _last_committed_batch(spark: SparkSession, checkpoint: str) -> int:
     """Highest batch id the checkpoint has COMMITTED (sink completed
     AND offset recorded). Batches written to the rollup but not yet
@@ -87,7 +83,7 @@ def _last_committed_batch(spark: SparkSession, checkpoint: str) -> int:
     HDFS/S3/file: checkpoint URI resolves the same way Spark's own
     commit log does (a local-only listdir would silently return -1
     there and turn compaction into a no-op)."""
-    fs, p = _fs_and_path(spark, os.path.join(checkpoint, "commits"))
+    fs, p = hadoop_fs(spark, os.path.join(checkpoint, "commits"))
     if not fs.exists(p):
         return -1
     ids = [
@@ -113,46 +109,38 @@ def compact_rollup(spark: SparkSession, rollup_path: str, checkpoint: str) -> No
     OFFLINE maintenance: stop the rollup stream first — the directory
     swap is not atomic with concurrent writes.
 
-    Crash safety: the compacted table is fully written to a staging
-    directory first, then swapped in with two renames (old -> trash,
-    staging -> live). The live directory is never deleted before its
-    replacement exists; the only crash window is between the two
-    renames, where the live path is briefly missing but BOTH complete
-    copies are on disk — recovery is renaming either `__old` (original)
-    or `__compacting` (compacted) back to the live path.
+    Crash safety is the store layer's shared swap
+    (store.crash_safe_rewrite): the compacted table is written to a
+    marked staging copy before the live directory moves, an
+    interrupted run is recovered on the next call, and copy+delete
+    object stores are refused before anything is touched.
     """
     committed = _last_committed_batch(spark, checkpoint)
-    partials = spark.read.parquet(rollup_path)
-    foldable = partials.filter(F.col("batch_id") <= committed)
-    keep = partials.filter(F.col("batch_id") > committed)
-    merged = (
-        foldable.groupBy(*ROLLUP_KEYS)
-        .agg(
-            F.sum("n_obs").alias("n_obs"),
-            # same fixed decimal as _batch_partials — see comment there
-            F.sum("t_sum").cast("decimal(38,2)").alias("t_sum"),
-            F.min("t_min").alias("t_min"),
-            F.max("t_max").alias("t_max"),
-        )
-        .withColumn("batch_id", F.lit(-1))
-        .unionByName(keep)
-    )
-    # stage distributed (never collect), fully written before any
-    # mutation of the live directory, then rename-swap
+    # no trailing slash: the swap's staging/aside dirs are siblings
+    # named after the live path
     live = rollup_path.rstrip("/")
-    staging, trash = live + "__compacting", live + "__old"
-    merged.write.mode("overwrite").partitionBy("batch_id").parquet(staging)
-    fs, live_p = _fs_and_path(spark, live)
-    _, staging_p = _fs_and_path(spark, staging)
-    _, trash_p = _fs_and_path(spark, trash)
-    fs.delete(trash_p, True)
-    if not fs.rename(live_p, trash_p):
-        raise IOError(f"compact_rollup: could not move {live} aside")
-    if not fs.rename(staging_p, live_p):
-        # roll back: restore the original so readers keep working
-        fs.rename(trash_p, live_p)
-        raise IOError(f"compact_rollup: could not swap in {staging}")
-    fs.delete(trash_p, True)
+
+    def _write_compacted(tmp: str) -> None:
+        partials = spark.read.parquet(live)
+        foldable = partials.filter(F.col("batch_id") <= committed)
+        keep = partials.filter(F.col("batch_id") > committed)
+        (
+            foldable.groupBy(*ROLLUP_KEYS)
+            .agg(
+                F.sum("n_obs").alias("n_obs"),
+                # same fixed decimal as _batch_partials — see comment there
+                F.sum("t_sum").cast("decimal(38,2)").alias("t_sum"),
+                F.min("t_min").alias("t_min"),
+                F.max("t_max").alias("t_max"),
+            )
+            .withColumn("batch_id", F.lit(-1))
+            .unionByName(keep)
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(tmp)
+        )
+
+    crash_safe_rewrite(spark, live, _write_compacted)
 
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:

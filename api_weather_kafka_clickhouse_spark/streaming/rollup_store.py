@@ -51,11 +51,9 @@ from .store import (
     append_partition,
     checkpoint_run_id,
     compact_tables,
-    ensure_store_scheme,
     guard_replay_after_compaction,
-    read_high_water,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
     write_high_water,
 )
 
@@ -79,8 +77,7 @@ def rollup_ingest_batch(
     parts table; see module docstring for the replay/compaction
     contract the high-water check enforces."""
     spark = events.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, ROLLUP_SCHEME, ("parts",))
+    open_scheme_store(spark, store_dir, ROLLUP_SCHEME, ("parts",), run_id)
 
     guard_replay_after_compaction(spark, store_dir, "parts", batch_id, "rollup")
 
@@ -93,9 +90,7 @@ def rollup_ingest_batch(
         .alias("value_sum"),
     )
     append_partition(partial, os.path.join(store_dir, "parts"), batch_id)
-    high = read_high_water(spark, store_dir)
-    if high is None or batch_id > high:
-        write_high_water(spark, store_dir, batch_id)
+    write_high_water(spark, store_dir, batch_id)
 
 
 def read_rollup(spark: SparkSession, store_dir: str) -> DataFrame:

@@ -52,9 +52,8 @@ from pyspark.sql.streaming import StreamingQuery
 from .store import (
     append_partition,
     checkpoint_run_id,
-    ensure_store_scheme,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
 )
 
 SCD2_SCHEME = "scd2-v1"
@@ -163,8 +162,7 @@ def scd2_ingest_batch(
         return now
 
     spark = events.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, SCD2_SCHEME, ("heads", "closed", "late"))
+    open_scheme_store(spark, store_dir, SCD2_SCHEME, ("heads", "closed", "late"), run_id)
 
     heads = read_heads(spark, store_dir, exclude_batch=batch_id).persist()
     try:

@@ -44,9 +44,8 @@ from .store import (
     append_partition,
     checkpoint_run_id,
     compact_tables,
-    ensure_store_scheme,
+    open_scheme_store,
     read_store,
-    verify_scheme_store_run,
 )
 
 SEG_SCHEME = f"segdedup-xxhash64-w{SEG_TOKENS}"
@@ -84,8 +83,7 @@ def segment_ingest_batch(
     checkpoint over a kept store before any write (see
     store.RUN_FILE)."""
     spark = batch.sparkSession
-    verify_scheme_store_run(spark, store_dir, run_id)
-    ensure_store_scheme(spark, store_dir, SEG_SCHEME, ("segs",))
+    open_scheme_store(spark, store_dir, SEG_SCHEME, ("segs",), run_id)
 
     w = Window.partitionBy("doc_id").orderBy("text")
     docs = (

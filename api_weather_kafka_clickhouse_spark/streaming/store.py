@@ -74,14 +74,22 @@ def _require_atomic_rename(fs, path: str) -> None:  # noqa: ANN001
         )
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop FS API,
+    so hdfs://, s3a:// and file: paths resolve the way Spark's own
+    readers resolve them. Every store, sink and rollup helper opens
+    its filesystem here."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FS API, so hdfs:///s3a://
     stores work identically to local paths (an os.path.isdir gate
     would silently treat every remote store as empty — no dedup, no
     error)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+    fs, p = hadoop_fs(spark, path)
+    return fs.exists(p)
 
 
 def read_small_text(spark: SparkSession, path: str) -> str | None:
@@ -91,10 +99,7 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
     to re-read ~50 bytes is measurable scheduling overhead. Returns
     None when the path does not exist; concatenates part files in
     name order (the layout spark.write.text produces)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
     if fs.getFileStatus(p).isDirectory():
@@ -113,7 +118,7 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
     for f in files:
         stream = fs.open(f)
         try:
-            out.append(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+            out.append(spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
         finally:
             stream.close()
     return "".join(out)
@@ -129,33 +134,38 @@ def write_small_text(spark: SparkSession, path: str, content: str) -> None:
     ``read_small_text`` reads via its single-file branch; stores
     written by the old directory-style writer remain readable.
 
-    Crash atomicity (round-16, round-15 ADVICE): the content is
-    written to a ``<path>.__tmp`` sibling and renamed over the target
-    — atomic on the POSIX/HDFS/ABFS filesystems the store layer's
-    compaction protocol already requires. A bare ``fs.create(p,
-    True)`` truncates in place, so a crash mid-write left an EMPTY
-    marker: an empty high-water marker reads back as None in
+    Crash atomicity: the content is written to a ``<path>.__tmp``
+    sibling, then ``FileContext.rename(..., OVERWRITE)`` replaces the
+    target in one step — atomic on the POSIX/HDFS/ABFS filesystems the
+    store layer's compaction protocol already requires. A crash leaves
+    either the old marker or the new one, never an empty or missing
+    one (an empty or missing high-water marker reads back as None in
     ``read_high_water``, silently disabling
-    ``guard_replay_after_compaction``'s double-count refusal."""
+    ``guard_replay_after_compaction``'s double-count refusal). The one
+    exception is the legacy layout, where the marker is a DIRECTORY of
+    part files: rename cannot replace a non-empty directory, so it is
+    deleted first and a crash in that window loses the old value once.
+
+    Assumes ONE writer per marker path (one Spark driver per store,
+    as RUN_FILE requires): the tmp name is fixed, so two concurrent
+    writers of the same marker would clobber each other's tmp file."""
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs, p = hadoop_fs(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(path + ".__tmp")
-    fs = p.getFileSystem(conf)
     stream = fs.create(tmp, True)
     try:
         stream.write(bytearray(content.encode("utf-8")))
     finally:
         stream.close()
-    # an old-layout marker is a DIRECTORY of part files at this path;
-    # rename cannot replace a directory, so clear it first (the window
-    # between delete and rename can lose the OLD value on a crash, but
-    # never leaves a truncated/empty file — the failure read_high_water
-    # cannot distinguish from "no marker yet")
-    if fs.exists(p):
+    if fs.exists(p) and fs.getFileStatus(p).isDirectory():
         fs.delete(p, True)
-    if not fs.rename(tmp, p):
-        raise IOError(f"write_small_text: rename {path}.__tmp -> {path} failed")
+    rename = jvm.org.apache.hadoop.fs.Options.Rename
+    opts = spark.sparkContext._gateway.new_array(rename, 1)
+    opts[0] = rename.OVERWRITE
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fs.getUri(), spark._jsc.hadoopConfiguration()
+    )
+    fc.rename(tmp, p, opts)
 
 
 def read_store(
@@ -286,25 +296,31 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
     """Rewrite the directory at ``path`` in place via the
     tmp → marker → aside → swap protocol whose steps, recovery cases,
     and filesystem requirements are documented (and proven) in the
-    compact_tables docstring above. compact_tables delegates here;
-    sources/sink.optimize_fact shares the same protocol for warehouse
-    partition rewrites instead of duplicating it.
+    compact_tables docstring above. Callers:
+
+    - ``compact_tables`` (the dedup_ingest, embedding_ingest,
+      segment_ingest, agg_store and rollup_store compactions), one
+      call per table;
+    - ``streaming/rollup.compact_rollup``, the weather rollup fold;
+    - ``sources/sink.optimize_fact`` and the per-leaf rewrite loop
+      behind ``sink.delete_fact``, ``sink.upsert_fact`` and the
+      boundary month of ``sink.ttl_expire``, one call per rewritten
+      warehouse leaf partition.
 
     ``write_tmp(tmp_path)`` must produce the COMPLETE rewritten copy
-    at ``tmp_path`` before returning. Returns True when a rewrite
-    happened, False when ``path`` does not exist (after recovery of
-    any previous interrupted rewrite of the same path, so
-    re-invocation always converges)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    at ``tmp_path`` before returning; it runs after recovery, so it
+    must read ``path`` itself rather than a frame resolved earlier.
+    Returns True when a rewrite happened, False when ``path`` does
+    not exist (after recovery of any previous interrupted rewrite of
+    the same path, so re-invocation always converges)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     tmp = path + "__compact_tmp"
     aside = path + "__compact_old"
-    p_live = jvm.org.apache.hadoop.fs.Path(path)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_aside = jvm.org.apache.hadoop.fs.Path(aside)
-    p_tmp_marker = jvm.org.apache.hadoop.fs.Path(os.path.join(tmp, COMPACT_MARKER))
-    p_live_marker = jvm.org.apache.hadoop.fs.Path(os.path.join(path, COMPACT_MARKER))
-    fs = p_live.getFileSystem(conf)
+    fs, p_live = hadoop_fs(spark, path)
+    p_tmp = Path(tmp)
+    p_aside = Path(aside)
+    p_tmp_marker = Path(os.path.join(tmp, COMPACT_MARKER))
+    p_live_marker = Path(os.path.join(path, COMPACT_MARKER))
     _require_atomic_rename(fs, path)
 
     # -- recovery of a previous crashed run (protocol above) --
@@ -348,7 +364,7 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
             if not fs.rename(p_aside, p_live):
                 raise IOError(f"compact recovery: rename {aside} -> {path} failed")
 
-    if not fs_exists(spark, path):
+    if not fs.exists(p_live):
         return False
     write_tmp(tmp)
     fs.create(p_tmp_marker, True).close()  # step 2: tmp is complete
@@ -362,53 +378,6 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
     fs.delete(p_aside, True)
     fs.delete(p_live_marker, False)  # housekeeping: marker travelled in
     return True
-
-
-def ensure_store_scheme(
-    spark: SparkSession, store_dir: str, scheme: str, tables: tuple[str, ...]
-) -> None:
-    """Fail LOUD when a store was written under different algorithm
-    parameters than the current code's.
-
-    ``scheme`` is a string identifying every parameter that makes
-    stored artifacts comparable to freshly-computed ones (permutation
-    count, banding shape, shingle policy, similarity kind...). A new
-    store records it in ``<store>/_scheme``; reopening checks it. A
-    mismatch — or a store holding data from before scheme versioning
-    existed — raises instead of silently admitting near-dups across
-    the parameter boundary (estimates between differently-computed
-    artifacts are biased low; the round-6 review's capped→uncapped
-    signing boundary is the motivating case). Recovery is a rebuild:
-    re-ingest the corpus (survivor files remain readable) into a
-    fresh store directory.
-    """
-    path = os.path.join(store_dir, SCHEME_FILE)
-    # driver-side Hadoop FS read (read_small_text), not
-    # spark.read.text().collect(): the record is ~50 bytes and this
-    # guard runs on EVERY micro-batch of every ingest store — a full
-    # Spark job per batch just to re-read it was measurable fixed
-    # control-plane cost in the r14 backfill benches (guide §1/§5:
-    # the driver should do almost no data work, and tiny metadata
-    # reads are driver work, not cluster work).
-    found_txt = read_small_text(spark, path)
-    if found_txt is not None:
-        found = found_txt.strip()
-        if found != scheme:
-            raise RuntimeError(
-                f"store {store_dir} was written with scheme {found!r} but the "
-                f"current code computes {scheme!r}; similarity estimates across "
-                "the boundary are invalid — rebuild the store by re-ingesting "
-                "into a fresh directory"
-            )
-        return
-    if any(fs_exists(spark, os.path.join(store_dir, t)) for t in tables):
-        raise RuntimeError(
-            f"store {store_dir} holds data but no {SCHEME_FILE} record (written "
-            "before scheme versioning); its artifacts cannot be assumed "
-            f"compatible with the current scheme {scheme!r} — rebuild the store "
-            "by re-ingesting into a fresh directory"
-        )
-    write_small_text(spark, path, scheme)
 
 
 # Stream-run identity marker ("_stream_run"): foreachBatch batch ids
@@ -480,20 +449,57 @@ def verify_stream_run(
     write_small_text(spark, path, run_id)
 
 
-def verify_scheme_store_run(spark: SparkSession, store_dir: str, run_id: str | None) -> None:
-    """verify_stream_run for the scheme-versioned ingest stores
-    (dedup/embedding/segment and the curation chain): ``has_state``
-    derives from the SCHEME_FILE record, which every such store writes
-    on first touch — so a store built by direct batch calls (no run
-    marker, scheme present) driven later by a stream refuses, exactly
-    like the centroid store's explicit-state variant. Must run BEFORE
-    ensure_store_scheme writes the record for a cold store."""
-    verify_stream_run(
-        spark,
-        store_dir,
-        run_id,
-        has_state=fs_exists(spark, os.path.join(store_dir, SCHEME_FILE)),
-    )
+def open_scheme_store(
+    spark: SparkSession,
+    store_dir: str,
+    scheme: str,
+    tables: tuple[str, ...],
+    run_id: str | None,
+) -> None:
+    """Open a scheme-versioned ingest store (dedup, embedding,
+    segment, er, scd2, agg, rollup_store) for one batch: the
+    stream-run check, then the algorithm-scheme check.
+
+    Run check (verify_stream_run): ``has_state`` is the presence of
+    the SCHEME_FILE record, which every such store writes on first
+    touch — so a store built by direct batch calls (no run marker,
+    scheme present) driven later by a stream refuses. It must see the
+    record as it was BEFORE this call writes it for a cold store.
+
+    Scheme check: ``scheme`` identifies every parameter that makes
+    stored artifacts comparable to freshly-computed ones (permutation
+    count, banding shape, shingle policy, similarity kind...). A new
+    store records it in ``<store>/_scheme``; a mismatch — or a store
+    holding data from before scheme versioning — raises instead of
+    silently admitting near-dups across the parameter boundary
+    (estimates between differently-computed artifacts are biased
+    low). Recovery is a rebuild: re-ingest the corpus into a fresh
+    store directory.
+
+    Both records are ~50-byte driver-side reads (read_small_text),
+    not Spark jobs: this runs on EVERY micro-batch of every store.
+    """
+    path = os.path.join(store_dir, SCHEME_FILE)
+    found = read_small_text(spark, path)
+    verify_stream_run(spark, store_dir, run_id, has_state=found is not None)
+    if found is not None:
+        found = found.strip()
+        if found != scheme:
+            raise RuntimeError(
+                f"store {store_dir} was written with scheme {found!r} but the "
+                f"current code computes {scheme!r}; similarity estimates across "
+                "the boundary are invalid — rebuild the store by re-ingesting "
+                "into a fresh directory"
+            )
+        return
+    if any(fs_exists(spark, os.path.join(store_dir, t)) for t in tables):
+        raise RuntimeError(
+            f"store {store_dir} holds data but no {SCHEME_FILE} record (written "
+            "before scheme versioning); its artifacts cannot be assumed "
+            f"compatible with the current scheme {scheme!r} — rebuild the store "
+            "by re-ingesting into a fresh directory"
+        )
+    write_small_text(spark, path, scheme)
 
 
 # --- high-water replay guard ----------------------------------------
@@ -509,7 +515,11 @@ def read_high_water(spark: SparkSession, store_dir: str) -> int | None:
 
 
 def write_high_water(spark: SparkSession, store_dir: str, batch_id: int) -> None:
-    write_small_text(spark, os.path.join(store_dir, MAX_BATCH_MARKER), str(batch_id))
+    """Raise the high-water marker to ``batch_id``. Monotone: a
+    replayed (lower) batch id leaves the marker where it is."""
+    high = read_high_water(spark, store_dir)
+    if high is None or batch_id > high:
+        write_small_text(spark, os.path.join(store_dir, MAX_BATCH_MARKER), str(batch_id))
 
 
 def guard_replay_after_compaction(

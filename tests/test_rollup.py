@@ -5,11 +5,14 @@ batch must not double-count (dynamic overwrite by batch_id)."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from api_weather_kafka_clickhouse_spark.streaming import pipeline, rollup
+from api_weather_kafka_clickhouse_spark.streaming import store as store_mod
 from tests.test_ingest_flatten import FULL_PAYLOAD, SPARSE_PAYLOAD
 
 
@@ -117,3 +120,47 @@ def test_rollup_replay_is_idempotent(spark, stream_dir, tmp_path):
     merged = _collect_map(rollup.read_rollup(spark, rp))
     assert len(merged) == len(first) + 1
     assert any(k[1] == "Third City" for k in merged)
+
+
+def _run_rollup(spark, stream_dir, rp, ck):
+    q = rollup.start_rollup(
+        pipeline.transform(pipeline.read_stream_json_files(spark, str(stream_dir))), rp, ck
+    )
+    q.awaitTermination(120)
+
+
+def test_compact_rollup_recovers_interrupted_swap(spark, stream_dir, tmp_path):
+    """A crash mid-swap leaves the live table moved aside to
+    __compact_old and a complete, marked __compact_tmp not yet renamed
+    in. The next compact_rollup must finish the swap and converge with
+    the answers unchanged."""
+    rp, ck = str(tmp_path / "rollup"), str(tmp_path / "ck")
+    _run_rollup(spark, stream_dir, rp, ck)
+    before = _collect_map(rollup.read_rollup(spark, rp))
+
+    tmp, aside = rp + "__compact_tmp", rp + "__compact_old"
+    shutil.copytree(rp, tmp)
+    open(os.path.join(tmp, store_mod.COMPACT_MARKER), "w").close()
+    os.rename(rp, aside)
+
+    rollup.compact_rollup(spark, rp, ck)
+    assert not os.path.exists(tmp) and not os.path.exists(aside)
+    assert not os.path.exists(os.path.join(rp, store_mod.COMPACT_MARKER))
+    assert _collect_map(rollup.read_rollup(spark, rp)) == before
+    batch_ids = {
+        r.batch_id for r in spark.read.parquet(rp).select("batch_id").distinct().collect()
+    }
+    assert batch_ids == {-1}
+
+
+def test_compact_rollup_refuses_nonatomic_rename_fs(spark, stream_dir, tmp_path, monkeypatch):
+    """On an object-store scheme compact_rollup must raise BEFORE
+    touching the rollup directory, like compact_tables."""
+    rp, ck = str(tmp_path / "rollup"), str(tmp_path / "ck")
+    _run_rollup(spark, stream_dir, rp, ck)
+    before = sorted(os.listdir(tmp_path)), sorted(os.listdir(rp))
+
+    monkeypatch.setattr(store_mod, "_fs_scheme", lambda fs, path: "s3a")
+    with pytest.raises(RuntimeError, match="non-atomic"):
+        rollup.compact_rollup(spark, rp, ck)
+    assert (sorted(os.listdir(tmp_path)), sorted(os.listdir(rp))) == before

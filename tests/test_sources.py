@@ -303,6 +303,48 @@ def test_upsert_fact_replaces_matching_keys_and_appends_new(spark, tmp_path):
     assert {(r.city_name, r.temp) for r in back.collect()} == got
 
 
+def test_upsert_fact_on_micro_batch_warehouse(spark, tmp_path):
+    """write_fact_batch lays out batch_id=N/event_month=M. Upsert must
+    append in that layout: a top-level event_month=M dir beside the
+    batch_id=N dirs makes every reader raise
+    CONFLICTING_PARTITION_COLUMN_NAMES. Reruns converge, and a later
+    micro-batch leaves the upserted rows in place."""
+    from pyspark.sql import Row
+
+    def row(city, temp, d="2024-01-15"):
+        return Row(event_date=d, city_name=city, event_time=f"{d} 01:00:00", temp=temp)
+
+    def df(rows):
+        return spark.createDataFrame(rows).withColumn(
+            "event_date", F.col("event_date").cast("date")
+        )
+
+    def got():
+        return {(r.city_name, r.temp) for r in sink.read_fact(spark, path).collect()}
+
+    path = str(tmp_path / "wh_ups_batches")
+    sink.write_fact_batch(df([row("a", 1.0), row("b", 2.0)]), path, 0)
+    sink.write_fact_batch(df([row("c", 3.0, "2024-02-15"), row("e", 5.0)]), path, 1)
+    updates = df([row("a", 10.0), row("c", 30.0, "2024-02-15")])
+    keys = ("event_date", "city_name")
+
+    replaced = sink.upsert_fact(spark, path, updates, keys=keys)
+    assert replaced == {
+        f"batch_id=0/{sink.MONTH_COL}=202401": 1,
+        f"batch_id=1/{sink.MONTH_COL}=202402": 1,
+    }
+    expected = {("a", 10.0), ("b", 2.0), ("c", 30.0), ("e", 5.0)}
+    assert got() == expected
+    assert sink.read_fact_between(spark, path, "2024-02-01", "2024-02-28").count() == 1
+    # re-running the same upsert converges
+    sink.upsert_fact(spark, path, updates, keys=keys)
+    assert sink.read_fact(spark, path).count() == 4
+    assert got() == expected
+    # a later micro-batch never overwrites the upserted rows
+    sink.write_fact_batch(df([row("f", 6.0)]), path, 2)
+    assert got() == expected | {("f", 6.0)}
+
+
 def test_ttl_expire_drops_whole_months_and_trims_boundary(spark, tmp_path):
     """TTL parity: months strictly before the cutoff month disappear
     without being read, the boundary month loses only its pre-cutoff
