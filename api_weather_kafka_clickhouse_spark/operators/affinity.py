@@ -922,11 +922,12 @@ def _bfs_layer_ctes() -> str:
     "layer — the reachability/blast-radius primitive (which parts "
     "and suppliers are within k hops of a recalled supplier set). "
     "Each hop is ONE shuffle equi-join of the edge list on the "
-    "frontier, a distinct, and a left-anti join against the visited "
-    "set; K hops = K static joins with no driver loop state. "
-    "Frontier and visited sets persist per level and release at the "
-    "end (the pagerank/MMR lazy-chain discipline — an unpersisted "
-    "level re-derives every prior level through the plan). Node ids, "
+    "previous layer's frontier, folded into the labels so far by one "
+    "min(layer) hash aggregate per node (a node keeps the smallest "
+    "layer it is proposed at); K hops = K static joins with no driver "
+    "loop state. Each level's labels persist and release at the end "
+    "(the pagerank/MMR lazy-chain discipline — an unpersisted level "
+    "re-derives every prior level through the plan). Node ids, "
     "layers, and the seed predicate are exact integers; first-"
     "reached semantics make the result set-unique, so the whole "
     "layer assignment hash-checks.",

@@ -19,10 +19,14 @@ flattening runs at Kafka-source line rate on a real cluster.
 
 from __future__ import annotations
 
+import operator
+from decimal import Decimal
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .schemas import WEATHER_RAW_SCHEMA
+from .schemas import FACT_COLUMNS, WEATHER_RAW_SCHEMA
 
 
 def parse_raw(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -40,6 +44,12 @@ def parse_raw(df: DataFrame, value_col: str = "value") -> DataFrame:
     but the contract (SURVEY §1.3) drops only syntactically invalid
     JSON and keeps mismatched fields as NULL→default. Only
     try_parse_json distinguishes the two cases.
+
+    Out-of-range numbers get the same NULL→default rule, so no
+    well-formed message stops ingest: from_json NULLs what the raw
+    type cannot hold (``humidity = 3e10``), _num/_epoch_ts what the
+    fact type cannot (``wind.gust = 100.5`` for decimal(4,2), an epoch
+    past year 9999). ``out_of_range`` flags the rows they defaulted.
     """
     value = F.col(value_col).cast("string")
     return df.withColumn(
@@ -51,16 +61,57 @@ def parse_raw(df: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
+# TimestampType's range, 0001-01-01 to 9999-12-31T23:59:59, in epoch s
+_EPOCH_RANGE = (-62135596800, 253402300799)
+
+
 def _num(path: str, out_type: str, default: int = 0) -> Column:
-    return F.coalesce(F.col(path), F.lit(default)).cast(out_type)
+    # try_cast: out of range -> NULL -> default
+    return F.coalesce(F.col(path).try_cast(out_type), F.lit(default).cast(out_type))
 
 
 def _epoch_ts(path: str) -> Column:
-    # NULL stays NULL (nullable TimestampType — §1.4 fix).
-    # timestamp_seconds converts directly; the from_unixtime →
+    # NULL or out of range -> NULL (nullable TimestampType — §1.4
+    # fix). timestamp_seconds converts directly; the from_unixtime →
     # to_timestamp round-trip formatted every value through a
     # session-timezone string for the same result
-    return F.timestamp_seconds(F.col(path))
+    return F.when(F.col(path).between(*_EPOCH_RANGE), F.timestamp_seconds(F.col(path)))
+
+
+# fact column -> (payload path, fact type), and -> epoch payload path
+_NUM_COLUMNS = {
+    "timezone": ("timezone", "int"),
+    "longitude": ("coord.lon", "float"),
+    "latitude": ("coord.lat", "float"),
+    "temperature": ("main.temp", "decimal(5,2)"),
+    "feels_like": ("main.feels_like", "decimal(5,2)"),
+    "temp_min": ("main.temp_min", "decimal(5,2)"),
+    "temp_max": ("main.temp_max", "decimal(5,2)"),
+    "pressure": ("main.pressure", "int"),
+    "humidity": ("main.humidity", "int"),
+    "visibility": ("visibility", "int"),
+    "wind_speed": ("wind.speed", "decimal(4,2)"),
+    "wind_degree": ("wind.deg", "int"),
+    "wind_gust": ("wind.gust", "decimal(4,2)"),
+    "cloudiness": ("clouds.all", "int"),
+}
+_EPOCH_COLUMNS = {"sunrise": "sys.sunrise", "sunset": "sys.sunset"}
+
+
+def out_of_range(r: str = "raw") -> Column:
+    """TRUE where the parsed ``r`` struct holds a number its fact
+    column cannot represent, which the flatten replaces with the
+    column default (see parse_raw)."""
+    # Only decimal casts can fail (a double past float range is ±inf).
+    # decimal(p,s) rounds half-up, so it overflows from |x| = 10^(p-s)
+    # - 10^-s / 2 on: a bound compare, cheaper than a second try_cast.
+    bad = [~F.col(f"{r}.{p}").between(*_EPOCH_RANGE) for p in _EPOCH_COLUMNS.values()]
+    for p, t in _NUM_COLUMNS.values():
+        if t.startswith("decimal"):
+            prec, scale = map(int, t[len("decimal(") : -1].split(","))
+            bound = float(10 ** (prec - scale) - Decimal(5).scaleb(-scale - 1))
+            bad.append(F.abs(F.col(f"{r}.{p}")) >= bound)
+    return F.coalesce(reduce(operator.or_, bad), F.lit(False))
 
 
 def _fact_columns(r: str, event_time: Column) -> list[Column]:
@@ -69,32 +120,17 @@ def _fact_columns(r: str, event_time: Column) -> list[Column]:
     # try_element_at: empty/missing weather array → NULL → '' default
     # (ANSI-mode element_at would error; reference default at :45)
     first_weather = F.try_element_at(F.col(f"{r}.weather"), F.lit(1))
-    return [
-        F.to_date(event_time).alias("event_date"),
-        event_time.alias("event_time"),
-        F.coalesce(F.col(f"{r}.name"), F.lit("")).alias("city_name"),
-        _num(f"{r}.timezone", "int").alias("timezone"),
-        F.coalesce(F.col(f"{r}.sys.country"), F.lit("")).alias("country"),
-        _num(f"{r}.coord.lon", "float").alias("longitude"),
-        _num(f"{r}.coord.lat", "float").alias("latitude"),
-        F.coalesce(first_weather.getField("main"), F.lit("")).alias("weather_main"),
-        F.coalesce(first_weather.getField("description"), F.lit("")).alias(
-            "weather_description"
-        ),
-        _num(f"{r}.main.temp", "decimal(5,2)").alias("temperature"),
-        _num(f"{r}.main.feels_like", "decimal(5,2)").alias("feels_like"),
-        _num(f"{r}.main.temp_min", "decimal(5,2)").alias("temp_min"),
-        _num(f"{r}.main.temp_max", "decimal(5,2)").alias("temp_max"),
-        _num(f"{r}.main.pressure", "int").alias("pressure"),
-        _num(f"{r}.main.humidity", "int").alias("humidity"),
-        _num(f"{r}.visibility", "int").alias("visibility"),
-        _num(f"{r}.wind.speed", "decimal(4,2)").alias("wind_speed"),
-        _num(f"{r}.wind.deg", "int").alias("wind_degree"),
-        _num(f"{r}.wind.gust", "decimal(4,2)").alias("wind_gust"),
-        _num(f"{r}.clouds.all", "int").alias("cloudiness"),
-        _epoch_ts(f"{r}.sys.sunrise").alias("sunrise"),
-        _epoch_ts(f"{r}.sys.sunset").alias("sunset"),
-    ]
+    cols = {
+        "event_date": F.to_date(event_time),
+        "event_time": event_time,
+        "city_name": F.coalesce(F.col(f"{r}.name"), F.lit("")),
+        "country": F.coalesce(F.col(f"{r}.sys.country"), F.lit("")),
+        "weather_main": F.coalesce(first_weather.getField("main"), F.lit("")),
+        "weather_description": F.coalesce(first_weather.getField("description"), F.lit("")),
+        **{c: _num(f"{r}.{p}", t) for c, (p, t) in _NUM_COLUMNS.items()},
+        **{c: _epoch_ts(f"{r}.{p}") for c, p in _EPOCH_COLUMNS.items()},
+    }
+    return [cols[c].alias(c) for c in FACT_COLUMNS]
 
 
 def flatten_weather(parsed: DataFrame, raw_col: str = "raw") -> DataFrame:

@@ -114,6 +114,9 @@ def jdbc_insert(df: DataFrame, url: str, table: str, properties: dict | None = N
     writer.save()
 
 
+TTL_TRASH_SUFFIX = "__ttl_trash"
+
+
 class _Leaf(NamedTuple):
     path: str  # scheme-qualified leaf directory
     rel: str  # directory relative to the table root
@@ -126,9 +129,16 @@ def _leaves(spark: SparkSession, path: str) -> Iterator[_Leaf]:
     that directly hold data files, at any nesting depth (event_month=M
     from write_fact, batch_id=N/event_month=M from write_fact_batch).
     Yields nothing for an absent table. The one walk every maintenance
-    verb below shares."""
-    from ..streaming.store import hadoop_fs
+    verb below shares.
 
+    The walk recovers the ``__compact_tmp``/``__compact_old`` siblings
+    of an interrupted rewrite (store.recover_swap) and deletes the
+    ``__ttl_trash`` of an interrupted TTL drop, so it never yields a
+    leftover as a leaf. Readers (read_fact, Spark partition discovery)
+    still see leftovers until the next maintenance verb runs."""
+    from ..streaming.store import SWAP_OLD, SWAP_TMP, hadoop_fs, recover_swap
+
+    suffixes = (SWAP_TMP, SWAP_OLD, TTL_TRASH_SUFFIX)
     fs, base = hadoop_fs(spark, path)
     if not fs.exists(base):
         return
@@ -139,8 +149,17 @@ def _leaves(spark: SparkSession, path: str) -> Iterator[_Leaf]:
     stack = [base]
     while stack:
         d = stack.pop()
+        listing = fs.listStatus(d)
+        leftovers = [p for p in (st.getPath() for st in listing) if p.getName().endswith(suffixes)]
+        for p in leftovers:
+            if p.getName().endswith(TTL_TRASH_SUFFIX):
+                fs.delete(p, True)
+            else:  # both swap suffixes have the same length
+                recover_swap(spark, p.toString()[: -len(SWAP_TMP)])
+        if leftovers:
+            listing = fs.listStatus(d)
         files = []
-        for st in fs.listStatus(d):
+        for st in listing:
             if st.getPath().getName().startswith(("_", ".")):
                 continue
             if st.isDirectory():
@@ -370,9 +389,6 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
         key_df.unpersist()
 
 
-TTL_TRASH_SUFFIX = "__ttl_trash"
-
-
 def ttl_expire(spark: SparkSession, path: str, older_than: str) -> dict[str, object]:
     """Retention TTL — ClickHouse ``TTL event_date + INTERVAL n DAY
     DELETE`` parity (the reference warehouse ages out raw weather
@@ -391,8 +407,8 @@ def ttl_expire(spark: SparkSession, path: str, older_than: str) -> dict[str, obj
       predicate, so only that month's partitions are scanned and
       rewritten through the crash-safe swap.
 
-    Idempotent: re-running after any crash converges (leftover trash
-    asides are swept first, already-dropped months are gone, the
+    Idempotent: re-running after any crash converges (the leaf walk
+    sweeps leftover trash asides, already-dropped months are gone, the
     boundary delete is delete_fact's no-op on zero matches). Returns
     ``{"dropped": [rel dirs], "boundary": {rel dir: rows deleted}}``.
     QUIESCENT POINT ONLY, like every in-place rewrite here.
@@ -400,25 +416,7 @@ def ttl_expire(spark: SparkSession, path: str, older_than: str) -> dict[str, obj
     from ..streaming.store import _require_atomic_rename, hadoop_fs
 
     cutoff_month = int(older_than[:7].replace("-", ""))
-    fs, base = hadoop_fs(spark, path)
-    if not fs.exists(base):
-        return {"dropped": [], "boundary": {}}
-
-    # recovery: finish any interrupted drop (the rename committed the
-    # drop; the delete just reclaims space)
-    stack, trash = [base], []
-    while stack:
-        p = stack.pop()
-        for s in fs.listStatus(p):
-            if not s.isDirectory():
-                continue
-            if s.getPath().getName().endswith(TTL_TRASH_SUFFIX):
-                trash.append(s.getPath())
-            else:
-                stack.append(s.getPath())
-    for t in trash:
-        fs.delete(t, True)
-
+    fs, _ = hadoop_fs(spark, path)
     Path = spark._jvm.org.apache.hadoop.fs.Path
     dropped: list[str] = []
     for leaf in _leaves(spark, path):

@@ -45,11 +45,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .store import (
     append_partition,
-    checkpoint_run_id,
     compact_tables,
     guard_replay_after_compaction,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
     write_high_water,
 )
 
@@ -132,15 +132,9 @@ def start_agg_ingest(
 ) -> StreamingQuery:
     """Wire the state store into a streaming query with the shared
     stream-run identity guard."""
-    return (
-        events_stream.writeStream.foreachBatch(
-            lambda df, bid: agg_state_batch(
-                df,
-                bid,
-                store_dir,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return start_foreach_batch(
+        events_stream,
+        checkpoint,
+        lambda df, bid, run_id: agg_state_batch(df, bid, store_dir, run_id=run_id),
+        trigger_seconds=0,
     )

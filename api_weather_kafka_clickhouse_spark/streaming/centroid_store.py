@@ -42,8 +42,9 @@ from .cluster_store import _recover, _swap_in
 from .store import (
     RUN_FILE,  # noqa: F401  (re-exported: tests and callers reference it here)
     append_partition,
-    checkpoint_run_id,
+    checkpoint_run_id,  # noqa: F401  (re-exported, like RUN_FILE)
     fs_exists,
+    start_foreach_batch,
     verify_stream_run,
 )
 
@@ -164,13 +165,8 @@ def start_centroid_ingest(
     checkpoint's query id as its run identity so a recreated
     checkpoint over a kept store fails loud instead of silently
     no-opping (see RUN_FILE)."""
-    return (
-        vecs_stream.writeStream.foreachBatch(
-            lambda df, bid: centroid_ingest_batch(
-                df, bid, store_dir, k, dim, run_id=checkpoint_run_id(df.sparkSession, checkpoint)
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        vecs_stream,
+        checkpoint,
+        lambda df, bid, run_id: centroid_ingest_batch(df, bid, store_dir, k, dim, run_id=run_id),
     )

@@ -39,7 +39,7 @@ from ..operators.bloom import build_bloom_bits, decontam_filter
 from ..operators.corpus_quality import gopher_filter
 from .cluster_store import canonicalize, read_labels, update_labels
 from .dedup_ingest import BAND_BUCKET_CAP, dedup_ingest_batch
-from .store import checkpoint_run_id, fs_exists, read_store
+from .store import StageTimer, fs_exists, read_store, start_foreach_batch
 
 
 def curation_dirs(base_dir: str) -> dict[str, str]:
@@ -72,8 +72,6 @@ def curate_batch(
     (bench instrumentation) accumulates wall seconds per stage: the
     dedup_ingest_batch boundaries plus ``label_fold`` for the
     cluster-label contraction."""
-    import time as _time
-
     gated = gopher_filter(batch, text_col)
     if bloom_bits is not None:
         gated = decontam_filter(gated, bloom_bits, text_col)
@@ -87,7 +85,7 @@ def curate_batch(
         run_id=run_id,
         stage_times=stage_times,
     )
-    _t = _time.perf_counter()
+    timer = StageTimer(stage_times)
     spark = batch.sparkSession
     # fold ONLY this batch's provenance pairs into the label store —
     # an incremental contraction, never a recluster of the corpus.
@@ -102,10 +100,7 @@ def curate_batch(
             only_batch=batch_id,
         ).select(F.col("dropped_id").alias("doc_a"), F.col("kept_id").alias("doc_b"))
         update_labels(spark, dirs["labels"], pairs)
-    if stage_times is not None:
-        stage_times["label_fold"] = stage_times.get("label_fold", 0.0) + (
-            _time.perf_counter() - _t
-        )
+    timer.mark("label_fold")
 
 
 def start_curation_pipeline(
@@ -130,21 +125,12 @@ def start_curation_pipeline(
         raise ValueError("pass eval_grams OR bloom_bits, not both")
     bits = build_bloom_bits(eval_grams) if eval_grams is not None else bloom_bits
     dirs = curation_dirs(base_dir)
-    return (
-        docs_stream.writeStream.foreachBatch(
-            lambda df, bid: curate_batch(
-                df,
-                bid,
-                dirs,
-                bits,
-                text_col,
-                bucket_cap,
-                run_id=checkpoint_run_id(df.sparkSession, dirs["checkpoint"]),
-            )
-        )
-        .option("checkpointLocation", dirs["checkpoint"])
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        docs_stream,
+        dirs["checkpoint"],
+        lambda df, bid, run_id: curate_batch(
+            df, bid, dirs, bits, text_col, bucket_cap, run_id=run_id
+        ),
     )
 
 

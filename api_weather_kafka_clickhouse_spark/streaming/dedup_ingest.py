@@ -72,11 +72,12 @@ from ..operators.dedup import (
 )
 from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
 from .store import (
+    StageTimer,
     append_partition,
-    checkpoint_run_id,
     compact_tables,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
 )
 
 SIG_SIM_THRESHOLD = 0.8
@@ -145,15 +146,7 @@ def dedup_ingest_batch(
     + the three signature-store appends), ``pairs_write`` (the
     provenance log append). Keys += across batches.
     """
-    import time as _time
-
     from pyspark.sql import Window
-
-    def _mark(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if stage_times is not None:
-            stage_times[key] = stage_times.get(key, 0.0) + (now - t0)
-        return now
 
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, SIG_SCHEME, ("sigs", "bands", "shorts"), run_id)
@@ -298,9 +291,9 @@ def dedup_ingest_batch(
                 # pre-batch store), then index from a RE-READ of the
                 # written files: their lineage is a file scan, immune
                 # to both the store mutation and cache eviction.
-                _t = _time.perf_counter()
+                timer = StageTimer(stage_times)
                 _append(survivors, survivors_dir)
-                _t = _mark("sign_join_survivors", _t)
+                timer.mark("sign_join_survivors")
                 # only THIS batch's partition: a re-delivered doc_id
                 # surviving in an older partition must not cause the
                 # current (dropped) copy to be re-indexed
@@ -317,7 +310,7 @@ def dedup_ingest_batch(
                     shorts.join(written, "doc_id", "left_semi"),
                     os.path.join(store_dir, "shorts"),
                 )
-                _t = _mark("index_write", _t)
+                timer.mark("index_write")
                 if pairs_dir is not None:
                     # safe to evaluate AFTER the store writes: every
                     # stored_* read excludes this batch's partitions,
@@ -337,7 +330,7 @@ def dedup_ingest_batch(
                         .distinct()
                     )
                     _append(pairs, pairs_dir)
-                    _mark("pairs_write", _t)
+                    timer.mark("pairs_write")
             finally:
                 pairs_vs_store.unpersist()
                 pairs_in_batch.unpersist()
@@ -361,21 +354,12 @@ def start_dedup_ingest(
     replayed micro-batch rewrite its own store/survivor partitions
     instead of double-admitting (effectively-exactly-once for the
     deterministic batch body, same as sources/sink.write_fact_batch)."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            lambda df, bid: dedup_ingest_batch(
-                df,
-                bid,
-                store_dir,
-                survivors_dir,
-                bucket_cap,
-                pairs_dir,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        docs_stream,
+        checkpoint,
+        lambda df, bid, run_id: dedup_ingest_batch(
+            df, bid, store_dir, survivors_dir, bucket_cap, pairs_dir, run_id=run_id
+        ),
     )
 
 

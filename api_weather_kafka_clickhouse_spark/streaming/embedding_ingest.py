@@ -60,10 +60,10 @@ from ..operators.similarity import _band_keys
 from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
 from .store import (
     append_partition,
-    checkpoint_run_id,
     compact_tables,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
 )
 
 # Scheme record for open_scheme_store — band keys from a FIXED
@@ -240,22 +240,12 @@ def start_embedding_ingest(
     checkpoint + per-batch_id dynamic partition overwrite makes a
     replayed micro-batch rewrite its own partitions instead of
     double-admitting (same contract as start_dedup_ingest)."""
-    return (
-        vecs_stream.writeStream.foreachBatch(
-            lambda df, bid: embedding_ingest_batch(
-                df,
-                bid,
-                store_dir,
-                survivors_dir,
-                threshold,
-                bucket_cap,
-                pairs_dir,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        vecs_stream,
+        checkpoint,
+        lambda df, bid, run_id: embedding_ingest_batch(
+            df, bid, store_dir, survivors_dir, threshold, bucket_cap, pairs_dir, run_id=run_id
+        ),
     )
 
 

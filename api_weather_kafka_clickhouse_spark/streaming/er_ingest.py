@@ -52,7 +52,6 @@ never rescanned.
 from __future__ import annotations
 
 import os
-import time as _time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -69,11 +68,12 @@ from .cluster_store import read_labels, update_labels
 from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
 from .store import (
     COMPACTED_BATCH_ID,
+    StageTimer,
     append_partition,
-    checkpoint_run_id,
     fs_exists,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
 )
 
 # Name chars riding the block key beside nation (ER_BLOCK_PREFIX,
@@ -196,12 +196,6 @@ def er_ingest_batch(
     by the pairs write), ``index_write`` (blocks/attrs appends),
     ``labels_update`` (the cluster-store contraction + swap)."""
 
-    def _mark(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if stage_times is not None:
-            stage_times[key] = stage_times.get(key, 0.0) + (now - t0)
-        return now
-
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, ER_SCHEME, ("blocks", "attrs"), run_id)
 
@@ -301,17 +295,17 @@ def er_ingest_batch(
             .persist()
         )
         try:
-            _t = _time.perf_counter()
+            timer = StageTimer(stage_times)
             # the pairs write is the one evaluation of the candidate +
             # verify plan (reads exclude this batch's partitions, so
             # write order vs the index appends below is not load-
             # bearing — kept first anyway so the expensive plan runs
             # against the persisted inputs while they are hot)
             append_partition(matches, pairs_dir, batch_id)
-            _t = _mark("block_verify_pairs", _t)
+            timer.mark("block_verify_pairs")
             append_partition(blocks, os.path.join(store_dir, "blocks"), batch_id)
             append_partition(batch_attrs, os.path.join(store_dir, "attrs"), batch_id)
-            _t = _mark("index_write", _t)
+            timer.mark("index_write")
             # a no-match batch (the steady state) skips the O(labels)
             # crash-safe table swap entirely. Whether the batch wrote
             # pairs is read off the partition listing (dynamic
@@ -331,7 +325,7 @@ def er_ingest_batch(
                     spark, pairs_dir, "doc_a bigint, doc_b bigint", only_batch=batch_id
                 ).select("doc_a", "doc_b")
                 update_labels(spark, labels_dir, written)
-            _mark("labels_update", _t)
+            timer.mark("labels_update")
         finally:
             matches.unpersist()
             stored_attrs.unpersist()
@@ -527,19 +521,10 @@ def start_er_ingest(
     per-batch_id dynamic partition overwrite + the idempotent label
     fold give effectively-exactly-once linkage for the deterministic
     batch body (the dedup-ingest replay contract)."""
-    return (
-        records_stream.writeStream.foreachBatch(
-            lambda df, bid: er_ingest_batch(
-                df,
-                bid,
-                store_dir,
-                pairs_dir,
-                labels_dir,
-                bucket_cap,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        records_stream,
+        checkpoint,
+        lambda df, bid, run_id: er_ingest_batch(
+            df, bid, store_dir, pairs_dir, labels_dir, bucket_cap, run_id=run_id
+        ),
     )

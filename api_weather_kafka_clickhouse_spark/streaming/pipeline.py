@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.flatten import flatten_weather, parse_raw
-from ..sources.schemas import WEATHER_RAW_SCHEMA
+from ..sources.flatten import flatten_weather, out_of_range, parse_raw
 from ..sources.sink import write_fact_batch
+from .store import fs_exists, start_foreach_batch, verify_stream_run
 
 
 def read_stream_json_files(spark: SparkSession, path: str) -> DataFrame:
@@ -39,15 +39,16 @@ def read_stream_json_files(spark: SparkSession, path: str) -> DataFrame:
 
 def transform(messages: DataFrame) -> DataFrame:
     """Message values → typed fact rows; corrupt JSON dropped (parity
-    with Consumer:174-175). The `observe` metrics surface message and
-    corrupt-row counts in every query progress event — the running
-    counters of the reference consumer (A21: Consumer:86-95) without
-    a second pass."""
+    with Consumer:174-175). The `observe` metrics surface message,
+    corrupt-row and defaulted-row (flatten.out_of_range) counts in
+    every query progress event — the running counters of the
+    reference consumer (A21: Consumer:86-95) without a second pass."""
     parsed = parse_raw(messages, "value")
     observed = parsed.observe(
         "ingest",
         F.count(F.lit(1)).alias("n_messages"),
         F.count(F.when(F.col("raw").isNull(), 1)).alias("n_corrupt"),
+        F.count(F.when(out_of_range("raw"), 1)).alias("n_defaulted"),
     )
     ok = observed.filter(F.col("raw").isNotNull())
     return flatten_weather(ok)
@@ -66,15 +67,11 @@ def start_pipeline(
     between sink and checkpoint-commit overwrites itself instead of
     double-appending — a plain append here would silently duplicate
     every fact row of the replayed batch."""
-    fact = transform(messages)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, batch_id: int, run_id: str | None) -> None:
+        has_state = fs_exists(batch_df.sparkSession, warehouse_path)
+        verify_stream_run(batch_df.sparkSession, warehouse_path, run_id, has_state)
         write_fact_batch(batch_df, warehouse_path, batch_id)
 
-    writer = fact.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint)
-    if trigger_seconds is not None:
-        # reference 300 s cycle (Producer:137 / Consumer time trigger)
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    # trigger_seconds: the reference 300 s cycle (Producer:137 / Consumer time trigger)
+    return start_foreach_batch(transform(messages), checkpoint, sink, trigger_seconds)

@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .store import crash_safe_rewrite, hadoop_fs
+from .store import (
+    crash_safe_rewrite,
+    fs_exists,
+    hadoop_fs,
+    start_foreach_batch,
+    verify_stream_run,
+)
 
 ROLLUP_KEYS = ("event_date", "city_name")
 
@@ -55,7 +61,9 @@ def start_rollup(
     """Maintain per-(event_date, city_name) partials from the typed
     fact stream (`pipeline.transform` output)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, batch_id: int, run_id: str | None) -> None:
+        has_state = fs_exists(batch_df.sparkSession, rollup_path)
+        verify_stream_run(batch_df.sparkSession, rollup_path, run_id, has_state)
         (
             _batch_partials(batch_df)
             .withColumn("batch_id", F.lit(batch_id))
@@ -65,12 +73,7 @@ def start_rollup(
             .parquet(rollup_path)
         )
 
-    writer = fact_stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint)
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(fact_stream, checkpoint, sink, trigger_seconds)
 
 
 def _last_committed_batch(spark: SparkSession, checkpoint: str) -> int:

@@ -49,11 +49,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .store import (
     append_partition,
-    checkpoint_run_id,
     compact_tables,
     guard_replay_after_compaction,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
     write_high_water,
 )
 
@@ -120,15 +120,9 @@ def start_rollup_ingest(
 ) -> StreamingQuery:
     """Wire the rollup into a streaming query with the shared
     stream-run identity guard."""
-    return (
-        events_stream.writeStream.foreachBatch(
-            lambda df, bid: rollup_ingest_batch(
-                df,
-                bid,
-                store_dir,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return start_foreach_batch(
+        events_stream,
+        checkpoint,
+        lambda df, bid, run_id: rollup_ingest_batch(df, bid, store_dir, run_id=run_id),
+        trigger_seconds=0,
     )

@@ -50,10 +50,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .store import (
+    StageTimer,
     append_partition,
-    checkpoint_run_id,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
 )
 
 SCD2_SCHEME = "scd2-v1"
@@ -151,15 +152,7 @@ def scd2_ingest_batch(
     EXECUTE at the closed-intervals append because the plan is lazy),
     ``heads_write`` and ``late_write`` (the two remaining appends,
     served from the persisted tagged/adj frames)."""
-    import time as _time
-
     from pyspark.sql import Window
-
-    def _mark(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if stage_times is not None:
-            stage_times[key] = stage_times.get(key, 0.0) + (now - t0)
-        return now
 
     spark = events.sparkSession
     open_scheme_store(spark, store_dir, SCD2_SCHEME, ("heads", "closed", "late"), run_id)
@@ -309,17 +302,17 @@ def scd2_ingest_batch(
         )
 
         try:
-            _t = _time.perf_counter()
+            timer = StageTimer(stage_times)
             append_partition(
                 closed_from_head.unionByName(closed_islands),
                 os.path.join(store_dir, "closed"),
                 batch_id,
             )
-            _t = _mark("fold_closed_write", _t)
+            timer.mark("fold_closed_write")
             append_partition(new_heads, os.path.join(store_dir, "heads"), batch_id)
-            _t = _mark("heads_write", _t)
+            timer.mark("heads_write")
             append_partition(late, os.path.join(store_dir, "late"), batch_id)
-            _mark("late_write", _t)
+            timer.mark("late_write")
         finally:
             adj.unpersist()
             tagged.unpersist()
@@ -334,15 +327,9 @@ def start_scd2_ingest(
     checkpointed foreachBatch with the shared stream-run identity
     guard, so a recreated checkpoint over a kept store refuses before
     any partition write (store.verify_stream_run)."""
-    return (
-        events_stream.writeStream.foreachBatch(
-            lambda df, bid: scd2_ingest_batch(
-                df,
-                bid,
-                store_dir,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return start_foreach_batch(
+        events_stream,
+        checkpoint,
+        lambda df, bid, run_id: scd2_ingest_batch(df, bid, store_dir, run_id=run_id),
+        trigger_seconds=0,
     )

@@ -42,10 +42,10 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.text_analysis import SEG_TOKENS
 from .store import (
     append_partition,
-    checkpoint_run_id,
     compact_tables,
     open_scheme_store,
     read_store,
+    start_foreach_batch,
 )
 
 SEG_SCHEME = f"segdedup-xxhash64-w{SEG_TOKENS}"
@@ -158,20 +158,12 @@ def start_segment_ingest(
     """Wire the incremental segment dedup into a streaming query —
     checkpoint + per-batch_id partition overwrite, same effectively-
     exactly-once contract as the other ingest modules."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            lambda df, bid: segment_ingest_batch(
-                df,
-                bid,
-                store_dir,
-                out_dir,
-                seg_tokens,
-                run_id=checkpoint_run_id(df.sparkSession, checkpoint),
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        docs_stream,
+        checkpoint,
+        lambda df, bid, run_id: segment_ingest_batch(
+            df, bid, store_dir, out_dir, seg_tokens, run_id=run_id
+        ),
     )
 
 

@@ -1,7 +1,8 @@
 """Shared persistent-store machinery for the incremental ingest
 modules (``dedup_ingest`` for text, ``embedding_ingest`` for
 vectors): batch-partitioned parquet tables with replay-aware reads
-and crash-safe compaction.
+and crash-safe compaction; plus every streaming wiring's query start
+(``start_foreach_batch``), run check and stage timer.
 
 Layout contract (per table): plain parquet, Hive-partitioned by the
 ingest batch id (``ingest_batch=<n>``), so a replayed micro-batch
@@ -14,9 +15,11 @@ into a single ``ingest_batch=-1`` partition at a quiescent point.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 COMPACTED_BATCH_ID = -1
 
@@ -25,6 +28,10 @@ COMPACTED_BATCH_ID = -1
 # a complete tmp copy from a partial one. Underscore-prefixed, so
 # parquet scans of the table ignore it once tmp is renamed live.
 COMPACT_MARKER = "_COMPACT_DONE"
+
+# crash_safe_rewrite's staging and moved-aside siblings of the path
+SWAP_TMP = "__compact_tmp"
+SWAP_OLD = "__compact_old"
 
 # One scheme-identifier file per store ("_scheme"): stored artifacts
 # (signatures, band keys) are only comparable to new ones computed by
@@ -310,22 +317,48 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
     ``write_tmp(tmp_path)`` must produce the COMPLETE rewritten copy
     at ``tmp_path`` before returning; it runs after recovery, so it
     must read ``path`` itself rather than a frame resolved earlier.
+    A stream-run marker (RUN_FILE) in ``path`` is carried into the new
+    copy, so a stream restarted after compact_rollup passes its check.
     Returns True when a rewrite happened, False when ``path`` does
     not exist (after recovery of any previous interrupted rewrite of
     the same path, so re-invocation always converges)."""
+    recover_swap(spark, path)
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    tmp = path + "__compact_tmp"
-    aside = path + "__compact_old"
+    tmp, aside = path + SWAP_TMP, path + SWAP_OLD
     fs, p_live = hadoop_fs(spark, path)
-    p_tmp = Path(tmp)
-    p_aside = Path(aside)
-    p_tmp_marker = Path(os.path.join(tmp, COMPACT_MARKER))
-    p_live_marker = Path(os.path.join(path, COMPACT_MARKER))
+    p_tmp, p_aside = Path(tmp), Path(aside)
+    if not fs.exists(p_live):
+        return False
+    write_tmp(tmp)
+    run = read_small_text(spark, os.path.join(path, RUN_FILE))
+    if run is not None:
+        write_small_text(spark, os.path.join(tmp, RUN_FILE), run)
+    fs.create(Path(os.path.join(tmp, COMPACT_MARKER)), True).close()  # step 2: tmp is complete
+    # -- the swap; rename returns FALSE on failure (no throw) --
+    if not fs.rename(p_live, p_aside):
+        raise IOError(f"compact: rename {path} -> {aside} failed")
+    if not fs.rename(p_tmp, p_live):
+        # put the old table back so the store is never left missing
+        fs.rename(p_aside, p_live)
+        raise IOError(f"compact: rename {tmp} -> {path} failed")
+    fs.delete(p_aside, True)
+    fs.delete(Path(os.path.join(path, COMPACT_MARKER)), False)  # the marker travelled in
+    return True
+
+
+def recover_swap(spark: SparkSession, path: str) -> None:
+    """Finish or undo an interrupted ``crash_safe_rewrite`` of ``path``
+    (the recovery cases of the compact_tables protocol): afterwards no
+    SWAP_TMP/SWAP_OLD sibling is left. Every rewrite runs it on entry;
+    ``sources/sink._leaves`` runs it on the leftovers its walk meets."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp, aside = path + SWAP_TMP, path + SWAP_OLD
+    fs, p_live = hadoop_fs(spark, path)
+    p_tmp, p_aside = Path(tmp), Path(aside)
     _require_atomic_rename(fs, path)
 
-    # -- recovery of a previous crashed run (protocol above) --
     if fs.exists(p_tmp):
-        if fs.exists(p_tmp_marker):  # tmp provably complete
+        if fs.exists(Path(os.path.join(tmp, COMPACT_MARKER))):  # tmp provably complete
             if fs.exists(p_live) and fs.exists(p_aside):
                 # only reachable when rename is non-atomic and the
                 # crash hit mid-step-3: live and aside are both
@@ -342,7 +375,7 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
                     fs.delete(p_aside, True)
             else:
                 # live complete, crash between steps 2 and 3 —
-                # discard tmp and recompact freshly below
+                # discard tmp and recompact freshly
                 fs.delete(p_tmp, True)
         else:  # tmp without marker: a partial write, UNLESS it is
             # the only remnant (legacy pre-marker writer)
@@ -364,21 +397,6 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
             if not fs.rename(p_aside, p_live):
                 raise IOError(f"compact recovery: rename {aside} -> {path} failed")
 
-    if not fs.exists(p_live):
-        return False
-    write_tmp(tmp)
-    fs.create(p_tmp_marker, True).close()  # step 2: tmp is complete
-    # -- the swap; rename returns FALSE on failure (no throw) --
-    if not fs.rename(p_live, p_aside):
-        raise IOError(f"compact: rename {path} -> {aside} failed")
-    if not fs.rename(p_tmp, p_live):
-        # put the old table back so the store is never left missing
-        fs.rename(p_aside, p_live)
-        raise IOError(f"compact: rename {tmp} -> {path} failed")
-    fs.delete(p_aside, True)
-    fs.delete(p_live_marker, False)  # housekeeping: marker travelled in
-    return True
-
 
 # Stream-run identity marker ("_stream_run"): foreachBatch batch ids
 # are only monotone WITHIN one checkpoint lineage. If the checkpoint
@@ -386,12 +404,13 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
 # 0 — replay guards silently no-op new batches (the centroid store's
 # round-6 finding) and per-batch dynamic partition overwrites silently
 # REPLACE the old run's early partitions (the ingest stores' version
-# of the same bug). Every streaming wiring (centroid, dedup,
-# embedding, segment, and the composed curation pipeline) therefore
-# records the query id (stable across restarts of one checkpoint,
-# fresh on a recreated one) and refuses LOUD when a different run
-# drives an existing store: store_dir and checkpoint must live and
-# die together.
+# of the same bug). Every streaming wiring therefore records the
+# query id (stable across restarts of one checkpoint, fresh on a
+# recreated one) and refuses LOUD when a different run drives an
+# existing store: the weather warehouse (pipeline.start_pipeline),
+# the weather rollup (rollup.start_rollup), and the centroid, dedup,
+# embedding, segment, er, scd2, agg, rollup_store and curation
+# ingests. store_dir and checkpoint must live and die together.
 RUN_FILE = "_stream_run"
 
 
@@ -408,6 +427,42 @@ def checkpoint_run_id(spark: SparkSession, checkpoint: str) -> str | None:
     if text is None:
         return None
     return str(json.loads(text)["id"])
+
+
+def start_foreach_batch(
+    stream: DataFrame, checkpoint: str, body, trigger_seconds: int | None = None
+) -> StreamingQuery:
+    """Start the checkpointed ``foreachBatch`` query of every streaming
+    wiring. ``body(df, batch_id, run_id)`` gets the checkpoint's query
+    id (resolved once per batch) for its run check (RUN_FILE).
+    ``trigger_seconds=None`` means availableNow; N means processingTime
+    every N seconds, and 0 is Spark's default back-to-back trigger."""
+
+    def _batch(df: DataFrame, batch_id: int) -> None:
+        body(df, batch_id, checkpoint_run_id(df.sparkSession, checkpoint))
+
+    writer = stream.writeStream.foreachBatch(_batch).option("checkpointLocation", checkpoint)
+    if trigger_seconds is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
+class StageTimer:
+    """The batch bodies' ``stage_times`` instrumentation: ``mark(key)``
+    adds the wall seconds since the previous mark (or construction)
+    to ``stage_times[key]``; ``None`` records nothing."""
+
+    def __init__(self, stage_times: dict[str, float] | None) -> None:
+        self.stage_times = stage_times
+        self.t = time.perf_counter()
+
+    def mark(self, key: str) -> None:
+        now = time.perf_counter()
+        if self.stage_times is not None:
+            self.stage_times[key] = self.stage_times.get(key, 0.0) + (now - self.t)
+        self.t = now
 
 
 def verify_stream_run(

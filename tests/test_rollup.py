@@ -164,3 +164,32 @@ def test_compact_rollup_refuses_nonatomic_rename_fs(spark, stream_dir, tmp_path,
     with pytest.raises(RuntimeError, match="non-atomic"):
         rollup.compact_rollup(spark, rp, ck)
     assert (sorted(os.listdir(tmp_path)), sorted(os.listdir(rp))) == before
+
+
+def test_rollup_recreated_checkpoint_over_kept_rollup_refuses(spark, stream_dir, tmp_path):
+    """A recreated checkpoint restarts batch ids at 0; its batch 0
+    would dynamically overwrite the kept rollup's batch_id=0 partials.
+    The rollup's stream-run marker, carried through compaction's
+    directory swap, makes that query fail before writing, and the
+    stored partials stay as they were."""
+    from pyspark.errors import StreamingQueryException
+
+    rp, ck = str(tmp_path / "rollup"), str(tmp_path / "ck")
+    _run_rollup(spark, stream_dir, rp, ck)
+    (stream_dir / "batch1.json").write_text(json.dumps(dict(FULL_PAYLOAD, name="Third City")))
+    _run_rollup(spark, stream_dir, rp, ck)
+    rollup.compact_rollup(spark, rp, ck)
+    (stream_dir / "batch2.json").write_text(json.dumps(dict(FULL_PAYLOAD, name="Fourth City")))
+    _run_rollup(spark, stream_dir, rp, ck)
+    before = sorted(map(tuple, spark.read.parquet(rp).collect()))
+
+    shutil.rmtree(ck)
+    other = tmp_path / "other_in"
+    other.mkdir()
+    (other / "b.json").write_text(json.dumps(dict(FULL_PAYLOAD, name="Intruder City")))
+    q = rollup.start_rollup(
+        pipeline.transform(pipeline.read_stream_json_files(spark, str(other))), rp, ck
+    )
+    with pytest.raises(StreamingQueryException, match="stream run"):
+        q.awaitTermination(120)
+    assert sorted(map(tuple, spark.read.parquet(rp).collect())) == before

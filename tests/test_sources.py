@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from api_weather_kafka_clickhouse_spark.sources import kafka, sink
@@ -500,3 +501,61 @@ def test_upsert_fact_collect_free_large_batch_and_null_keys(spark, tmp_path):
     assert {
         r.temp for r in back.filter(F.col("city_name") == "city7").collect()
     } == {1007.0}
+
+
+@pytest.mark.parametrize("verb", ["optimize", "delete", "upsert", "ttl", "parts"])
+def test_maintenance_verbs_converge_after_interrupted_swap(spark, tmp_path, verb):
+    """A crash inside a leaf rewrite leaves ``<leaf>__compact_tmp`` /
+    ``__compact_old`` siblings. Every maintenance verb walks the table
+    through sink._leaves, which recovers them: afterwards no leftover
+    is on disk, none was treated as a partition, and the table reads
+    back exactly its rows with an int event_month."""
+    import os
+    import shutil
+
+    from pyspark.sql import Row
+
+    from api_weather_kafka_clickhouse_spark.streaming.store import COMPACT_MARKER
+
+    def df(rows):
+        return spark.createDataFrame(
+            [Row(event_date=d, city_name=c, event_time=f"{d} 01:00:00", temp=t) for c, t, d in rows]
+        ).withColumn("event_date", F.col("event_date").cast("date"))
+
+    path = str(tmp_path / "wh_swap")
+    jan_rows = [("a", 1.0, "2024-01-15"), ("b", 2.0, "2024-01-15")]
+    sink.write_fact(df(jan_rows + [("a", 3.0, "2024-02-15"), ("b", 4.0, "2024-02-15")]), path)
+    jan = os.path.join(path, f"{sink.MONTH_COL}=202401")
+    feb = os.path.join(path, f"{sink.MONTH_COL}=202402")
+    # marked: the live leaf moved aside, the complete tmp not yet in
+    shutil.copytree(jan, jan + "__compact_tmp")
+    open(os.path.join(jan + "__compact_tmp", COMPACT_MARKER), "w").close()
+    os.rename(jan, jan + "__compact_old")
+    # unmarked: a partial tmp copy beside the complete live leaf
+    shutil.copytree(feb, feb + "__compact_tmp")
+
+    months = {f"{sink.MONTH_COL}=202401", f"{sink.MONTH_COL}=202402"}
+    expected = {("a", 1.0), ("b", 2.0), ("a", 3.0), ("b", 4.0)}
+    if verb == "optimize":
+        assert set(sink.optimize_fact(spark, path, target_file_bytes=1 << 30)) <= months
+    elif verb == "delete":
+        assert sink.delete_fact(spark, path, F.col("city_name") == "a") == dict.fromkeys(months, 1)
+        expected = {("b", 2.0), ("b", 4.0)}
+    elif verb == "upsert":
+        update = df([("a", 9.0, "2024-01-15")])
+        replaced = sink.upsert_fact(spark, path, update, keys=("event_date", "city_name"))
+        assert replaced == {f"{sink.MONTH_COL}=202401": 1}
+        expected = {("a", 9.0), ("b", 2.0), ("a", 3.0), ("b", 4.0)}
+    elif verb == "ttl":
+        out = sink.ttl_expire(spark, path, "2024-02-01")
+        assert out == {"dropped": [f"{sink.MONTH_COL}=202401"], "boundary": {}}
+        expected = {("a", 3.0), ("b", 4.0)}
+    else:
+        parts = {r.partition: r.rows for r in sink.table_parts(spark, path).collect()}
+        assert parts == dict.fromkeys(months, 2)
+
+    assert not [d for d in os.listdir(path) if "__compact" in d]
+    back = sink.read_fact(spark, path)
+    assert dict(back.dtypes)[sink.MONTH_COL] == "int"
+    got = [(r.city_name, r.temp) for r in back.collect()]
+    assert sorted(got) == sorted(expected)

@@ -6,8 +6,13 @@ dedup, restart-resume (at-least-once parity, §2-A20)."""
 from __future__ import annotations
 
 import json
+import math
+import shutil
+from decimal import Decimal
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from api_weather_kafka_clickhouse_spark.sources.flatten import (
@@ -359,3 +364,122 @@ def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
     assert (1, 21.5, "storm") in rows and (1, 22.0, "hail") in rows
     assert (2, 1.0, "wind") in rows
     assert (2, -3.0, None) in rows
+
+
+def test_pipeline_recreated_checkpoint_over_kept_warehouse_refuses(spark, stream_dir, tmp_path):
+    """A recreated checkpoint restarts batch ids at 0, so its first
+    batch would dynamically overwrite the kept warehouse's batch_id=0
+    partitions. The warehouse's stream-run marker makes that query
+    fail before writing, and the stored rows stay as they were."""
+    from pyspark.errors import StreamingQueryException
+
+    wh, ck = str(tmp_path / "warehouse"), tmp_path / "ckpt"
+    msgs = pipeline.read_stream_json_files(spark, str(stream_dir))
+    pipeline.start_pipeline(msgs, wh, str(ck)).awaitTermination(120)
+    before = sorted(map(tuple, spark.read.parquet(wh).drop("event_time").collect()))
+
+    shutil.rmtree(ck)
+    other = tmp_path / "other_in"
+    other.mkdir()
+    (other / "b.json").write_text(json.dumps(dict(FULL_PAYLOAD, name="Intruder City")))
+    q = pipeline.start_pipeline(pipeline.read_stream_json_files(spark, str(other)), wh, str(ck))
+    with pytest.raises(StreamingQueryException, match="stream run"):
+        q.awaitTermination(120)
+    assert sorted(map(tuple, spark.read.parquet(wh).drop("event_time").collect())) == before
+
+
+# payload-shaped JSON objects whose leaves are any JSON value: every
+# typed path of WEATHER_RAW_SCHEMA sees numbers of every size, strings,
+# arrays, objects and nulls
+_json_leaf = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.integers(min_value=-(10**30), max_value=10**30),
+    st.floats(allow_nan=False, allow_infinity=False),
+    st.text(max_size=4),
+)
+_json = st.recursive(
+    _json_leaf,
+    lambda c: st.lists(c, max_size=3) | st.dictionaries(st.text(max_size=3), c, max_size=3),
+    max_leaves=6,
+)
+# the schema's typed fields draw plain numbers of any size more often
+_field = st.floats(allow_nan=False, allow_infinity=False) | st.integers() | _json
+
+
+def _obj(*keys):
+    return st.fixed_dictionaries({}, optional=dict.fromkeys(keys, _field)) | _json
+
+
+_payload = st.fixed_dictionaries(
+    {},
+    optional={
+        "coord": _obj("lon", "lat"),
+        "weather": st.lists(_obj("main", "description"), max_size=2) | _json,
+        "main": _obj("temp", "feels_like", "temp_min", "temp_max", "pressure", "humidity"),
+        "visibility": _field,
+        "wind": _obj("speed", "deg", "gust"),
+        "clouds": _obj("all"),
+        "dt": _field,
+        "sys": _obj("country", "sunrise", "sunset"),
+        "timezone": _field,
+        "name": _json,
+    },
+)
+
+
+@given(payloads=st.lists(_payload, min_size=1, max_size=30))
+@settings(
+    max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+def test_transform_never_raises_on_any_json_object(spark, payloads):
+    """No syntactically valid message may stop ingest: whatever a
+    JSON object holds, transform evaluates every fact column (the
+    string casts force each) and keeps one row per object."""
+    msgs = spark.createDataFrame([(json.dumps(p),) for p in payloads], "value string")
+    fact = pipeline.transform(msgs)
+    rows = fact.select([F.col(c).cast("string") for c in fact.columns]).collect()
+    assert len(rows) == len(payloads)
+
+
+def test_out_of_range_numbers_default_and_are_counted(spark, tmp_path):
+    """Under ANSI casts, wind.gust = 100.5 (decimal(4,2)) and
+    main.temp = 1e9 (decimal(5,2)) used to fail the micro-batch, which
+    then replayed into the same error. They take the column default
+    instead, and observe("ingest") counts exactly the defaulted rows,
+    also at the half-up rounding edge of each decimal type."""
+    d = tmp_path / "range_in"
+    d.mkdir()
+
+    def msg(name, **fields):
+        return json.dumps(dict(FULL_PAYLOAD, name=name, **fields))
+
+    main, wind = FULL_PAYLOAD["main"], FULL_PAYLOAD["wind"]
+    lines = [
+        msg("Gusty", wind=dict(wind, gust=100.5)),
+        msg("Hot", main=dict(main, temp=1e9)),
+        msg("Late", sys=dict(FULL_PAYLOAD["sys"], sunrise=10**18)),
+        msg("GustEdge", wind=dict(wind, gust=99.995)),
+        msg("GustBelow", wind=dict(wind, gust=math.nextafter(99.995, 0))),
+        msg("ColdEdge", main=dict(main, temp=-999.995)),
+        msg("ColdBelow", main=dict(main, temp=-999.994)),
+        json.dumps(FULL_PAYLOAD),
+    ]
+    (d / "b.json").write_text("\n".join(lines))
+    wh = str(tmp_path / "wh")
+    msgs = pipeline.read_stream_json_files(spark, str(d))
+    q = pipeline.start_pipeline(msgs, wh, str(tmp_path / "ck"))
+    q.awaitTermination(120)
+    rows = {r.city_name: r for r in spark.read.parquet(wh).collect()}
+    assert rows["Gusty"].wind_gust == 0 and rows["Gusty"].temperature == Decimal("-7.34")
+    assert rows["Hot"].temperature == 0 and rows["Hot"].wind_gust == Decimal("7.20")
+    assert rows["Late"].sunrise is None and rows["Late"].sunset is not None
+    assert rows["GustEdge"].wind_gust == 0 and rows["GustBelow"].wind_gust == Decimal("99.99")
+    assert rows["ColdEdge"].temperature == 0 and rows["ColdBelow"].temperature == Decimal("-999.99")
+    progresses = [json.loads(p.json if hasattr(p, "json") else p) for p in q.recentProgress]
+    ingest = [
+        p["observedMetrics"]["ingest"]
+        for p in progresses
+        if p.get("observedMetrics", {}).get("ingest")
+    ]
+    assert sum(m["n_defaulted"] for m in ingest) == 5
