@@ -230,11 +230,12 @@ def optimize_fact(
     their target file count are untouched (so a second call is a
     no-op — merge idempotence).
 
-    Streaming appends land one file set per micro-batch (plus
-    speculative/task-retry fragments); without merging, a year of
-    5-minute batches is ~100k files per partition and scan planning
-    chokes on footers long before data volume matters. Per-partition
-    cost is one read+sort+write of that partition only.
+    This merges small files WITHIN a leaf (``write_fact`` appends,
+    task-retry fragments). It does not bound a streaming warehouse:
+    ``write_fact_batch`` puts every micro-batch in its own
+    ``batch_id=N/event_month=M`` leaf, so the leaf count grows with
+    the batch count and merging inside a leaf cannot bound it.
+    Per-partition cost is one read+sort+write of that partition only.
 
     Crash-safe via the shared tmp/marker/aside swap
     (streaming/store.crash_safe_rewrite) — at every instant a

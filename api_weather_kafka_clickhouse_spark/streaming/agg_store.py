@@ -26,9 +26,9 @@ merge states on read; ``compact_agg`` pre-merges all parts into one
 partition through the shared crash-safe swap — states merge to
 states (the HLL union keeps BINARY form in the compacted part), so
 compaction is invisible to readers except for cost. Replay safety is
-the shared high-water contract (store.guard_replay_after_compaction):
-a replayed batch overwrites its own partition idempotently; a replay
-AFTER its partition was folded refuses loudly.
+the shared fold-record rule (store.guard_replay_after_compaction): a
+replayed batch overwrites its own partition idempotently; a replay of
+a batch the compaction folded refuses loudly.
 
 avg is derived at the edge as value_sum/n from the exact states —
 never stored (a stored float average cannot merge; the sum/count
@@ -50,7 +50,6 @@ from .store import (
     open_scheme_store,
     read_store,
     start_foreach_batch,
-    write_high_water,
 )
 
 AGG_SCHEME = "agg-states-hour-v1"
@@ -98,7 +97,6 @@ def agg_state_batch(
         F.hll_sketch_agg("user_id", UNIQ_LG_K).alias("uniq_state"),
     )
     append_partition(partial, os.path.join(store_dir, "parts"), batch_id)
-    write_high_water(spark, store_dir, batch_id)
 
 
 def read_agg(spark: SparkSession, store_dir: str) -> DataFrame:

@@ -144,5 +144,17 @@ def read_survivors(spark: SparkSession, base_dir: str) -> DataFrame:
 
 def resolve_canonical(spark: SparkSession, base_dir: str, docs: DataFrame) -> DataFrame:
     """Attach ``canonical_id`` (the kept representative) to any frame
-    of doc_ids, via the pipeline's maintained label store."""
-    return canonicalize(docs, read_labels(spark, curation_dirs(base_dir)["labels"]))
+    of doc_ids, via the pipeline's maintained label store: each
+    component resolves to its smallest SURVIVING doc id (the label
+    store's canonical is the component's smallest id, which may be a
+    dropped doc); docs with no label are their own canonical."""
+    labels = read_labels(spark, curation_dirs(base_dir)["labels"])
+    kept = (
+        labels.join(read_survivors(spark, base_dir).select("doc_id"), "doc_id")
+        .groupBy("canonical_id")
+        .agg(F.min("doc_id").alias("survivor"))
+    )
+    resolved = labels.join(kept, "canonical_id").select(
+        "doc_id", F.col("survivor").alias("canonical_id")
+    )
+    return canonicalize(docs, resolved)

@@ -75,6 +75,7 @@ from .store import (
     StageTimer,
     append_partition,
     compact_tables,
+    folded_upto,
     open_scheme_store,
     read_store,
     start_foreach_batch,
@@ -150,6 +151,8 @@ def dedup_ingest_batch(
 
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, SIG_SCHEME, ("sigs", "bands", "shorts"), run_id)
+    if batch_id <= folded_upto(spark, store_dir, "sigs"):
+        return  # replay of a folded batch: the fold holds its admissions
 
     # collapse duplicate doc_ids deterministically before anything
     # else (see module docstring): keep the lexicographically-

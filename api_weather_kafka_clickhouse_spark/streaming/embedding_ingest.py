@@ -61,6 +61,7 @@ from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
 from .store import (
     append_partition,
     compact_tables,
+    folded_upto,
     open_scheme_store,
     read_store,
     start_foreach_batch,
@@ -115,6 +116,8 @@ def embedding_ingest_batch(
 
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, VEC_SCHEME, ("vecs", "bands"), run_id)
+    if batch_id <= folded_upto(spark, store_dir, "vecs"):
+        return  # replay of a folded batch: the fold holds its admissions
 
     w = Window.partitionBy("vec_id").orderBy("vec")
     vecs = (

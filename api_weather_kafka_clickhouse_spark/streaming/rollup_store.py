@@ -25,13 +25,13 @@ identical input and dynamic-partition-overwrites its own partition —
 idempotent WITHOUT reading the store. The one summing-specific
 hazard is replay AFTER compaction: the batch's rows are already
 inside the folded partition, so a rewrite would double-count. The
-``_MAX_BATCH`` high-water marker (updated after every batch write)
-turns that into a loud refusal: a batch id at or below the marker
-whose own partition no longer exists must have been folded, and the
-body raises instead of double-counting. Run compaction only at a
-quiescent point with the checkpoint intact (same contract as every
-store here) and the case cannot arise: restarts resume from
-committed offsets, so only NEW batch ids follow a compaction.
+compaction records the highest batch id it folds (store.FOLD_RECORD),
+and the body refuses a batch id at or below it whose own partition is
+gone instead of double-counting; no batch writes a marker. Run
+compaction only at a quiescent point with the checkpoint intact
+(same contract as every store here) and the case cannot arise:
+restarts resume from committed offsets, so only NEW batch ids follow
+a compaction.
 
 At 100 TB: the write path is a map-side-combined aggregate of each
 micro-batch with a dimension-sized result; the read path scans
@@ -54,7 +54,6 @@ from .store import (
     open_scheme_store,
     read_store,
     start_foreach_batch,
-    write_high_water,
 )
 
 ROLLUP_SCHEME = "rollup-hour-sum-v1"
@@ -75,7 +74,7 @@ def rollup_ingest_batch(
     """foreachBatch body: write this batch's (bucket, event_type)
     partial aggregate as its own store partition. Never reads the
     parts table; see module docstring for the replay/compaction
-    contract the high-water check enforces."""
+    contract the fold-record check enforces."""
     spark = events.sparkSession
     open_scheme_store(spark, store_dir, ROLLUP_SCHEME, ("parts",), run_id)
 
@@ -90,7 +89,6 @@ def rollup_ingest_batch(
         .alias("value_sum"),
     )
     append_partition(partial, os.path.join(store_dir, "parts"), batch_id)
-    write_high_water(spark, store_dir, batch_id)
 
 
 def read_rollup(spark: SparkSession, store_dir: str) -> DataFrame:

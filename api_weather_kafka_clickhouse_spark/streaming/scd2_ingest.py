@@ -52,6 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 from .store import (
     StageTimer,
     append_partition,
+    guard_replay_after_compaction,
     open_scheme_store,
     read_store,
     start_foreach_batch,
@@ -156,6 +157,7 @@ def scd2_ingest_batch(
 
     spark = events.sparkSession
     open_scheme_store(spark, store_dir, SCD2_SCHEME, ("heads", "closed", "late"), run_id)
+    guard_replay_after_compaction(spark, store_dir, "heads", batch_id, "scd2")
 
     heads = read_heads(spark, store_dir, exclude_batch=batch_id).persist()
     try:

@@ -43,6 +43,7 @@ from ..operators.text_analysis import SEG_TOKENS
 from .store import (
     append_partition,
     compact_tables,
+    folded_upto,
     open_scheme_store,
     read_store,
     start_foreach_batch,
@@ -84,6 +85,8 @@ def segment_ingest_batch(
     store.RUN_FILE)."""
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, SEG_SCHEME, ("segs",), run_id)
+    if batch_id <= folded_upto(spark, store_dir, "segs"):
+        return  # replay of a folded batch: the fold holds its admissions
 
     w = Window.partitionBy("doc_id").orderBy("text")
     docs = (

@@ -134,11 +134,11 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
 def write_small_text(spark: SparkSession, path: str, content: str) -> None:
     """Driver-side write of a SMALL text file through the Hadoop FS
     API — no Spark job. The write-side twin of ``read_small_text``,
-    for the marker/metadata files (scheme, run id, high-water): a
+    for the marker/metadata files (scheme and run id on a store's
+    first batch, the fold record per compaction): a
     ``createDataFrame().coalesce(1).write.text`` of ~50 bytes costs a
-    full job submission per call, which the per-batch markers pay on
-    every micro-batch. Writes a plain file (overwriting), which
-    ``read_small_text`` reads via its single-file branch; stores
+    full job submission per call. Writes a plain file (overwriting),
+    which ``read_small_text`` reads via its single-file branch; stores
     written by the old directory-style writer remain readable.
 
     Crash atomicity: the content is written to a ``<path>.__tmp``
@@ -146,12 +146,10 @@ def write_small_text(spark: SparkSession, path: str, content: str) -> None:
     target in one step — atomic on the POSIX/HDFS/ABFS filesystems the
     store layer's compaction protocol already requires. A crash leaves
     either the old marker or the new one, never an empty or missing
-    one (an empty or missing high-water marker reads back as None in
-    ``read_high_water``, silently disabling
-    ``guard_replay_after_compaction``'s double-count refusal). The one
-    exception is the legacy layout, where the marker is a DIRECTORY of
-    part files: rename cannot replace a non-empty directory, so it is
-    deleted first and a crash in that window loses the old value once.
+    one. The one exception is the legacy layout, where the marker is a
+    DIRECTORY of part files: rename cannot replace a non-empty
+    directory, so it is deleted first and a crash in that window loses
+    the old value once.
 
     Assumes ONE writer per marker path (one Spark driver per store,
     as RUN_FILE requires): the tmp name is fixed, so two concurrent
@@ -239,14 +237,15 @@ def compact_tables(
     MUST run at a QUIESCENT point: no in-flight batch, no pending
     replay (the swap below briefly moves the table aside, and a
     concurrent batch reading a missing store would dedup against
-    nothing). A replay arriving AFTER compaction degrades safely: the
-    replayed batch's rows are already in the compacted partition, so
-    every row self-matches, the batch admits nothing, and its (empty)
-    partition writes change no data.
+    nothing). Replay after compaction: a batch id at or below the
+    table's FOLD_RECORD (``folded_upto``) is already inside the
+    compacted partition, so the summing and head-delta stores refuse
+    it (``guard_replay_after_compaction``) and the dedup, embedding
+    and segment stores return before any write.
 
     Crash safety protocol (per table):
 
-    1. write the compacted copy to ``__compact_tmp``
+    1. write the compacted copy and its FOLD_RECORD to ``__compact_tmp``
     2. create the ``_COMPACT_DONE`` marker INSIDE tmp — recovery
        trusts a tmp copy only when the marker proves the parquet job
        finished
@@ -283,8 +282,12 @@ def compact_tables(
     for sub, schema in tables:
         path = os.path.join(store_dir, sub)
 
-        def _write_compacted(tmp: str, _path: str = path, _schema: str = schema) -> None:
-            df = read_store(spark, _path, _schema)
+        def _write_compacted(tmp: str) -> None:  # called within this iteration
+            fs, p = hadoop_fs(spark, path)
+            names = [st.getPath().getName() for st in fs.listStatus(p)]
+            ids = [int(n.split("=", 1)[1]) for n in names if n.startswith("ingest_batch=")]
+            upto = max(ids + [folded_upto(spark, store_dir, sub)])
+            df = read_store(spark, path, schema)
             if transform is not None:
                 df = transform(df)
             (
@@ -293,6 +296,7 @@ def compact_tables(
                 .partitionBy("ingest_batch")
                 .parquet(tmp)
             )
+            write_small_text(spark, os.path.join(tmp, FOLD_RECORD), str(upto))
 
         if crash_safe_rewrite(spark, path, _write_compacted):
             rewritten += 1
@@ -557,44 +561,41 @@ def open_scheme_store(
     write_small_text(spark, path, scheme)
 
 
-# --- high-water replay guard ----------------------------------------
+# --- replay after a fold --------------------------------------------
 
-MAX_BATCH_MARKER = "_MAX_BATCH"
-
-
-def read_high_water(spark: SparkSession, store_dir: str) -> int | None:
-    """Highest batch id ever written to this store (None before the
-    first batch). Driver-side marker read, no Spark job."""
-    txt = read_small_text(spark, os.path.join(store_dir, MAX_BATCH_MARKER))
-    return int(txt.strip()) if txt and txt.strip() else None
+# The highest ingest batch id a fold holds (a MergeTree part name's
+# block range): compact_tables writes it into the staging copy, so it
+# goes live with the fold; "_" keeps it out of every scan and walk.
+FOLD_RECORD = "_FOLDED_UPTO"
 
 
-def write_high_water(spark: SparkSession, store_dir: str, batch_id: int) -> None:
-    """Raise the high-water marker to ``batch_id``. Monotone: a
-    replayed (lower) batch id leaves the marker where it is."""
-    high = read_high_water(spark, store_dir)
-    if high is None or batch_id > high:
-        write_small_text(spark, os.path.join(store_dir, MAX_BATCH_MARKER), str(batch_id))
+def folded_upto(spark: SparkSession, store_dir: str, table: str) -> int:
+    """Highest batch id folded into ``table`` (COMPACTED_BATCH_ID before
+    its first fold); for a store compacted before FOLD_RECORD existed,
+    its legacy ``_MAX_BATCH`` high-water marker (read, never written)."""
+    txt = read_small_text(spark, os.path.join(store_dir, table, FOLD_RECORD))
+    if txt is None:
+        txt = read_small_text(spark, os.path.join(store_dir, "_MAX_BATCH"))
+    return int(txt) if txt and txt.strip() else COMPACTED_BATCH_ID
 
 
 def guard_replay_after_compaction(
     spark: SparkSession, store_dir: str, table: str, batch_id: int, store_kind: str
 ) -> None:
     """Refuse the one replay case delta stores cannot make idempotent:
-    a batch id at or below the high-water marker whose own partition
-    no longer exists must have been folded into a compacted part, so
+    a batch id at or below the fold record (``folded_upto``) whose own
+    partition no longer exists was folded into a compacted part, so
     rewriting it would double-count rows already inside the fold.
     (A replay whose partition still exists is safe — the dynamic
-    partition overwrite replaces it.) Shared by every partial-state
-    delta store (SummingMergeTree rollup, AggregatingMergeTree
-    states) so the refusal logic exists once."""
-    high = read_high_water(spark, store_dir)
-    if high is not None and batch_id <= high:
+    partition overwrite replaces it.) Shared by the rollup, agg-state
+    and scd2 stores so the refusal logic exists once."""
+    high = folded_upto(spark, store_dir, table)
+    if batch_id <= high:
         own = os.path.join(store_dir, table, f"ingest_batch={batch_id}")
         if not fs_exists(spark, own):
             raise RuntimeError(
                 f"{store_kind} store {store_dir}: batch {batch_id} replayed after "
-                f"its partition was compacted away (high-water {high}); rewriting "
+                f"its partition was compacted away (folded up to {high}); rewriting "
                 "it would double-count rows already folded into the compacted "
                 "part. Compaction must only run at a quiescent point with the "
                 "checkpoint intact — rebuild the store or restore the checkpoint."
