@@ -29,6 +29,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.clickhouse import toYYYYMM
+
 MONTH_COL = "event_month"
 SORT_KEY = ("event_date", "city_name", "event_time")
 
@@ -43,7 +45,7 @@ def with_month(df: DataFrame) -> DataFrame:
     ``spark.sql.sources.partitionColumnTypeInference.enabled`` was
     false (round-4 advice). An int value round-trips identically with
     inference on or off."""
-    return df.withColumn(MONTH_COL, F.date_format("event_date", "yyyyMM").cast("int"))
+    return df.withColumn(MONTH_COL, toYYYYMM("event_date"))
 
 
 def write_fact(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -92,10 +94,7 @@ def read_fact_between(spark: SparkSession, path: str, start_date: str, end_date:
     prunes directories, the event_date predicate then row-filters via
     parquet min/max stats on the sorted files — together, MergeTree
     partition + granule skipping parity."""
-    months = (
-        F.date_format(F.lit(start_date), "yyyyMM").cast("int"),
-        F.date_format(F.lit(end_date), "yyyyMM").cast("int"),
-    )
+    months = (toYYYYMM(F.lit(start_date)), toYYYYMM(F.lit(end_date)))
     return (
         spark.read.parquet(path)
         .filter(F.col(MONTH_COL).between(*months))

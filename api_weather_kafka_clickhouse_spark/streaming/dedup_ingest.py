@@ -24,9 +24,10 @@ the same idempotent-foreachBatch pattern as sources/sink.py):
 
 Dedup rule per new doc (deterministic):
 - duplicate doc_ids within a batch collapse first (keep the
-  lexicographically-smallest text — producer-retry rows would
-  otherwise both pass the anti-join, and same-id-different-text rows
-  would merge shingle sets into a signature matching neither);
+  lexicographically-smallest text, NULL first — store.collapse_ids;
+  producer-retry rows would otherwise both pass the anti-join, and
+  same-id-different-text rows would merge shingle sets into a
+  signature matching neither);
 - a shingleable doc is dropped if a band match against the STORE has
   estimated Jaccard >= threshold (fraction of agreeing minhash
   components — the standard unbiased estimator; at 64 permutations
@@ -70,10 +71,11 @@ from ..operators.dedup import (
     minhash_bands,
     minhash_signatures,
 )
-from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
+from .lsh_candidates import BAND_BUCKET_CAP, near_dup_pairs
 from .store import (
     StageTimer,
     append_partition,
+    collapse_ids,
     compact_tables,
     folded_upto,
     open_scheme_store,
@@ -154,28 +156,9 @@ def dedup_ingest_batch(
     if batch_id <= folded_upto(spark, store_dir, "sigs"):
         return  # replay of a folded batch: the fold holds its admissions
 
-    # collapse duplicate doc_ids deterministically before anything
-    # else (see module docstring): keep the lexicographically-
-    # smallest text. min() IS that rule, as a hash aggregate whose
-    # map-side partial phase pre-reduces duplicates before the
-    # exchange — the row_number window this replaces shuffled and
-    # sorted every retry copy (round-15, guide §2.3).
-    # (the struct's leading isNotNull key reproduces the window's
-    # nulls-first ascending order exactly — a bare min(text) would
-    # skip NULLs and silently flip the kept row for a retry pair
-    # where one copy's text is NULL)
-    docs = (
-        batch.groupBy("doc_id")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("text").isNotNull().alias("_nn"), F.col("text").alias("text")
-                )
-            ).alias("_t")
-        )
-        .select("doc_id", F.col("_t.text").alias("text"))
-        .persist()
-    )
+    # collapse duplicate doc_ids before anything else (see module
+    # docstring): min(struct) keeps the smallest text, NULL first
+    docs = collapse_ids(batch, "doc_id", "text").persist()
     try:
         # cap=None: the hot-shingle document-frequency cut is a
         # CORPUS-level statistic; computed per micro-batch it would
@@ -200,44 +183,22 @@ def dedup_ingest_batch(
                 spark, os.path.join(store_dir, "shorts"), _SHORT_SCHEMA, exclude_batch=batch_id
             )
 
-            # candidates vs the store: bounded bucket join (see
-            # lsh_candidates — cap=None signing moved the hot-bucket
-            # quadratic guard from the shingle cut to the join), then
-            # sig fetch for the survivors' similarity estimate
-            cand_old = (
-                vs_store_pairs(bands, stored_bands, "doc_id", cap=bucket_cap)
-                .withColumnRenamed("new_id", "doc_id")
-                .join(sig.select("doc_id", F.col("sig").alias("new_sig")), "doc_id")
-                .join(
-                    stored_sigs.select(F.col("doc_id").alias("old_id"), F.col("sig").alias("old_sig")),
-                    "old_id",
-                )
+            # bounded bucket joins (see lsh_candidates — cap=None
+            # signing moved the hot-bucket quadratic guard from the
+            # shingle cut to the join), then the similarity estimate
+            # on the candidates' fetched sigs; within the batch the
+            # lowest id is kept
+            pairs_vs_store, pairs_in_batch = near_dup_pairs(
+                bands,
+                stored_bands,
+                sig.select("doc_id", "sig"),
+                stored_sigs,
+                "doc_id",
+                lambda a, b: _estimated_sim(a, b) >= SIG_SIM_THRESHOLD,
+                cap=bucket_cap,
             )
-            # persisted: the decided pair sets (ids only, tiny) feed
-            # BOTH the dropped-set/survivors write and the provenance
-            # pairs log — without the cache the expensive candidate
-            # join + sim filter would run twice per batch
-            pairs_vs_store = (
-                cand_old.filter(_estimated_sim("new_sig", "old_sig") >= SIG_SIM_THRESHOLD)
-                .select("doc_id", "old_id")
-                .persist()
-            )
-            dropped_vs_store = pairs_vs_store.select("doc_id")
-
-            # candidates within the batch: keep the lowest id
-            cand_new = (
-                within_batch_pairs(bands, "doc_id", cap=bucket_cap)
-                .withColumnRenamed("id_a", "doc_a")
-                .withColumnRenamed("id_b", "doc_b")
-                .join(sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")), "doc_a")
-                .join(sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")), "doc_b")
-            )
-            pairs_in_batch = (
-                cand_new.filter(_estimated_sim("sig_a", "sig_b") >= SIG_SIM_THRESHOLD)
-                .select("doc_a", "doc_b")
-                .persist()
-            )
-            dropped_in_batch = pairs_in_batch.select(F.col("doc_b").alias("doc_id"))
+            dropped_vs_store = pairs_vs_store.select(F.col("new_id").alias("doc_id"))
+            dropped_in_batch = pairs_in_batch.select(F.col("id_b").alias("doc_id"))
 
             # docs too short to shingle: exact md5 dedup vs the shorts
             # store and within the batch (keep-lowest id per digest)
@@ -326,8 +287,8 @@ def dedup_ingest_batch(
                         )
 
                     pairs = (
-                        _p(pairs_vs_store, "doc_id", "old_id", "neardup_store")
-                        .unionByName(_p(pairs_in_batch, "doc_b", "doc_a", "neardup_batch"))
+                        _p(pairs_vs_store, "new_id", "old_id", "neardup_store")
+                        .unionByName(_p(pairs_in_batch, "id_b", "id_a", "neardup_batch"))
                         .unionByName(_p(short_pairs_vs_store, "doc_id", "old_id", "short_store"))
                         .unionByName(_p(short_pairs_in_batch, "doc_id", "kept", "short_batch"))
                         .distinct()

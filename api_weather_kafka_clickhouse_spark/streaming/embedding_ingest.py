@@ -21,15 +21,20 @@ replay-idempotent contract of ``streaming/store.py``):
 
 Dedup rule per new vector (deterministic):
 - duplicate vec_ids within a batch collapse first (keep the
-  lexicographically-smallest vec, mirroring dedup_ingest's
-  smallest-text rule);
+  lexicographically-smallest vec, NULL first — store.collapse_ids,
+  the rule of every ingest store);
 - a vector is dropped if a band-match candidate from the STORE has
   exact cosine >= threshold, or a band-matched SMALLER-id vector of
   the same batch does (keep-lowest within the batch, one hop — the
   transitive closure over history is what the running store
   provides);
 - an all-zero vector has no cosine (null) and is never dropped by
-  similarity — exact-duplicate ids still collapse.
+  similarity — exact-duplicate ids still collapse;
+- a NULL vector, or one whose length is not the plane dimension
+  (VEC_DIM, 64), gets no band keys: it is admitted unindexed and
+  never dropped by similarity, the all-zero rule. Banding it would
+  raise, and a replay would raise again, so one such row would wedge
+  the stream.
 
 Replay correctness: a batch EXCLUDES its own store partitions from
 every decision (see store.read_store), so a partial first attempt
@@ -57,9 +62,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.vectors import dot, norm
 from ..operators.similarity import _band_keys
-from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
+from .lsh_candidates import BAND_BUCKET_CAP, near_dup_pairs
 from .store import (
     append_partition,
+    collapse_ids,
     compact_tables,
     folded_upto,
     open_scheme_store,
@@ -71,6 +77,7 @@ from .store import (
 # 16-hyperplane SRP set over 64-dim vectors, exact-cosine admission;
 # a store written under different planes/dims must fail loud.
 VEC_SCHEME = "srp-planes16-dim64-cosine"
+VEC_DIM = 64
 
 
 def _safe_cosine(a, b):
@@ -88,8 +95,10 @@ _BAND_SCHEMA = "vec_id bigint, band_idx int, band_key int"
 
 def _bands_of(vecs: DataFrame) -> DataFrame:
     """(vec_id, band_idx, band_key) for a (vec_id, vec) frame — one
-    vectorized matmul pass, ids+ints out (no vector payload)."""
-    return vecs.select(
+    vectorized matmul pass, ids+ints out (no vector payload). Only
+    vectors of the plane dimension are banded: the matmul raises on a
+    NULL or other-length vector (see the module docstring's rule)."""
+    return vecs.filter(F.size("vec") == VEC_DIM).select(
         "vec_id", F.posexplode(_band_keys(F.col("vec"))).alias("band_idx", "band_key")
     )
 
@@ -112,66 +121,37 @@ def embedding_ingest_batch(
 
     ``batch`` needs columns (vec_id bigint, vec array<double>).
     """
-    from pyspark.sql import Window
-
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, VEC_SCHEME, ("vecs", "bands"), run_id)
     if batch_id <= folded_upto(spark, store_dir, "vecs"):
         return  # replay of a folded batch: the fold holds its admissions
 
-    w = Window.partitionBy("vec_id").orderBy("vec")
-    vecs = (
-        batch.select("vec_id", "vec", F.row_number().over(w).alias("_rn"))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
-    )
+    vecs = collapse_ids(batch, "vec_id", "vec").persist()
     try:
+        stored_bands = read_store(
+            spark, os.path.join(store_dir, "bands"), _BAND_SCHEMA, exclude_batch=batch_id
+        )
+        stored_vecs = read_store(
+            spark, os.path.join(store_dir, "vecs"), _VEC_SCHEMA, exclude_batch=batch_id
+        )
         bands = _bands_of(vecs).persist()
+        # bounded bucket joins propose ids (see lsh_candidates for the
+        # hot-bucket guard), exact cosine on the re-attached vectors
+        # decides; within the batch the lowest id is kept
+        pairs_vs_store, pairs_in_batch = near_dup_pairs(
+            bands,
+            stored_bands,
+            vecs,
+            stored_vecs,
+            "vec_id",
+            lambda a, b: _safe_cosine(F.col(a), F.col(b)) >= threshold,
+            cap=bucket_cap,
+        )
         try:
-            stored_bands = read_store(
-                spark, os.path.join(store_dir, "bands"), _BAND_SCHEMA, exclude_batch=batch_id
-            )
-            stored_vecs = read_store(
-                spark, os.path.join(store_dir, "vecs"), _VEC_SCHEMA, exclude_batch=batch_id
-            )
-
-            # candidates vs the store: bounded bucket join proposes
-            # ids (see lsh_candidates for the hot-bucket guard), exact
-            # cosine on the re-attached vectors decides
-            cand_old = (
-                vs_store_pairs(bands, stored_bands, "vec_id", cap=bucket_cap)
-                .withColumnRenamed("new_id", "vec_id")
-                .join(vecs.select("vec_id", F.col("vec").alias("new_vec")), "vec_id")
-                .join(
-                    stored_vecs.select(
-                        F.col("vec_id").alias("old_id"), F.col("vec").alias("old_vec")
-                    ),
-                    "old_id",
-                )
-            )
-            pairs_vs_store = cand_old.filter(
-                _safe_cosine(F.col("new_vec"), F.col("old_vec")) >= threshold
-            ).select("vec_id", "old_id")
-            dropped_vs_store = pairs_vs_store.select("vec_id")
-
-            # candidates within the batch: keep the lowest id
-            cand_new = (
-                within_batch_pairs(bands, "vec_id", cap=bucket_cap)
-                .withColumnRenamed("id_a", "vec_a")
-                .withColumnRenamed("id_b", "vec_b")
-                .join(vecs.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va")), "vec_a")
-                .join(vecs.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb")), "vec_b")
-            )
-            pairs_in_batch = cand_new.filter(
-                _safe_cosine(F.col("va"), F.col("vb")) >= threshold
-            ).select("vec_a", "vec_b")
-            dropped_in_batch = pairs_in_batch.select(F.col("vec_b").alias("vec_id"))
-
             dropped = (
-                dropped_vs_store.unionByName(dropped_in_batch)
+                pairs_vs_store.select(F.col("new_id").alias("dropped_id"))
+                .unionByName(pairs_in_batch.select(F.col("id_b").alias("dropped_id")))
                 .distinct()
-                .select(F.col("vec_id").alias("dropped_id"))
             )
             # renamed right side: a bare self-join on vec_id would
             # degenerate (same attribute id both sides) and drop
@@ -210,14 +190,14 @@ def embedding_ingest_batch(
                 # same contract as dedup_ingest's pairs log.
                 pairs = (
                     pairs_vs_store.select(
-                        F.col("vec_id").alias("dropped_id"),
+                        F.col("new_id").alias("dropped_id"),
                         F.col("old_id").alias("kept_id"),
                         F.lit("cos_store").alias("kind"),
                     )
                     .unionByName(
                         pairs_in_batch.select(
-                            F.col("vec_b").alias("dropped_id"),
-                            F.col("vec_a").alias("kept_id"),
+                            F.col("id_b").alias("dropped_id"),
+                            F.col("id_a").alias("kept_id"),
                             F.lit("cos_batch").alias("kind"),
                         )
                     )
@@ -225,6 +205,8 @@ def embedding_ingest_batch(
                 )
                 append_partition(pairs, pairs_dir, batch_id)
         finally:
+            pairs_vs_store.unpersist()
+            pairs_in_batch.unpersist()
             bands.unpersist()
     finally:
         vecs.unpersist()

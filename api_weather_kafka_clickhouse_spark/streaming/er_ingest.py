@@ -70,6 +70,7 @@ from .store import (
     COMPACTED_BATCH_ID,
     StageTimer,
     append_partition,
+    collapse_ids,
     fs_exists,
     open_scheme_store,
     read_store,
@@ -199,30 +200,20 @@ def er_ingest_batch(
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, ER_SCHEME, ("blocks", "attrs"), run_id)
 
-    # collapse duplicate rec_ids deterministically (producer retries):
-    # keep the lexicographically-smallest (name, nation, bal) tuple.
-    # min(struct(...)) IS that tuple-min, as a hash aggregate with a
-    # map-side partial phase — the row_number window this replaces
-    # shuffled and sorted every duplicate row (guide §2.3).
-    recs = (
+    # collapse duplicate rec_ids (producer retries): keep the
+    # smallest (name, nation, bal) tuple
+    recs = collapse_ids(
         batch.select(
             "rec_id",
-            F.struct(
-                "name",
-                F.col("nation").cast("bigint").alias("nation"),
-                F.col("bal_cents").cast("bigint").alias("bal_cents"),
-            ).alias("_t"),
-        )
-        .groupBy("rec_id")
-        .agg(F.min("_t").alias("_t"))
-        .select(
-            "rec_id",
-            F.col("_t.name").alias("name"),
-            F.col("_t.nation").alias("nation"),
-            F.col("_t.bal_cents").alias("bal_cents"),
-        )
-        .persist()
-    )
+            "name",
+            F.col("nation").cast("bigint").alias("nation"),
+            F.col("bal_cents").cast("bigint").alias("bal_cents"),
+        ),
+        "rec_id",
+        "name",
+        "nation",
+        "bal_cents",
+    ).persist()
     try:
         blocks = recs.select(
             "rec_id",
@@ -426,25 +417,12 @@ def reconcile_store(
     lake), one nation-partitioned sort window, DL per candidate
     (window-1 per record), and a contraction over O(new links) — the
     weekly batch job beside the always-on ingest."""
-    if reconcile_batch_id > COMPACTED_BATCH_ID:
+    if reconcile_batch_id >= COMPACTED_BATCH_ID:
         raise ValueError(
-            "reconcile_batch_id must be < COMPACTED_BATCH_ID (i.e. <= "
-            f"{COMPACTED_BATCH_ID - 1}), unique per scheduled run — e.g. "
-            "-(epoch seconds): non-negative ids collide with streaming "
-            f"ingest partitions, and {COMPACTED_BATCH_ID} is the store "
-            "layout's compaction sentinel (a sweep under that id would "
-            "dynamic-partition-overwrite the COMPACTED pairs history and "
-            "read it back mixed into the sweep); got "
-            f"{reconcile_batch_id}"
-        )
-    if reconcile_batch_id == COMPACTED_BATCH_ID:
-        raise ValueError(
-            f"reconcile_batch_id {COMPACTED_BATCH_ID} is COMPACTED_BATCH_ID, "
-            "the store layout's compaction sentinel — a sweep under it "
-            "would overwrite the compacted pairs history (destroying the "
-            "audit/rebuild log) and read_store(only_batch=-1) would return "
-            "compacted history mixed with the sweep; use a unique id <= -2, "
-            "e.g. -(epoch seconds)"
+            f"reconcile_batch_id must be < COMPACTED_BATCH_ID ({COMPACTED_BATCH_ID}), "
+            "unique per scheduled run, e.g. -(epoch seconds): ids >= 0 collide with "
+            "streaming ingest partitions, and -1 is the compaction sentinel, whose "
+            f"partition holds the compacted pairs history; got {reconcile_batch_id}"
         )
     attrs = _latest_attrs(spark, store_dir)
     w = Window.partitionBy("nation").orderBy("name", "rec_id")

@@ -1,6 +1,8 @@
 """Bounded LSH candidate-pair generation, shared by the incremental
 ingest modules (``dedup_ingest`` minhash bands, ``embedding_ingest``
-SRP bands).
+SRP bands, ``er_ingest`` block keys), and the one verified near-dup
+pair search over it (``near_dup_pairs``): candidates propose, an
+exact predicate on the re-attached values decides.
 
 Why a bound exists: a band bucket of n members proposes O(n²)
 candidate pairs. Normal buckets are tiny (that is the point of LSH),
@@ -52,7 +54,9 @@ key would break that replay contract, not just this module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 BAND_BUCKET_CAP = 64
@@ -103,3 +107,43 @@ def vs_store_pairs(
         .select("new_id", "old_id")
         .distinct()
     )
+
+
+def near_dup_pairs(
+    bands: DataFrame,
+    stored_bands: DataFrame,
+    values: DataFrame,
+    stored_values: DataFrame,
+    id_col: str,
+    similar: Callable[[str, str], Column],
+    cap: int = BAND_BUCKET_CAP,
+) -> tuple[DataFrame, DataFrame]:
+    """Verified near-dup pairs of a batch: ``(new_id, old_id)`` against
+    the store and ``(id_a, id_b)`` within the batch (id_a < id_b).
+    ``values``/``stored_values`` are ``(id_col, value)`` frames whose
+    value re-attaches to the bounded candidates above; ``similar(a, b)``
+    takes two value column names and decides. Both legs come back
+    persisted — each feeds the dropped set AND the pairs log, which
+    would otherwise run the candidate join + predicate twice — so the
+    caller unpersists them."""
+
+    def side(df: DataFrame, i: str, v: str) -> DataFrame:
+        return df.select(F.col(id_col).alias(i), F.col(df.columns[1]).alias(v))
+
+    vs_store = (
+        vs_store_pairs(bands, stored_bands, id_col, cap)
+        .join(side(values, "new_id", "_v_new"), "new_id")
+        .join(side(stored_values, "old_id", "_v_old"), "old_id")
+        .filter(similar("_v_new", "_v_old"))
+        .select("new_id", "old_id")
+        .persist()
+    )
+    in_batch = (
+        within_batch_pairs(bands, id_col, cap)
+        .join(side(values, "id_a", "_v_a"), "id_a")
+        .join(side(values, "id_b", "_v_b"), "id_b")
+        .filter(similar("_v_a", "_v_b"))
+        .select("id_a", "id_b")
+        .persist()
+    )
+    return vs_store, in_batch

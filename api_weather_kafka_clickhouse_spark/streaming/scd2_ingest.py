@@ -20,8 +20,8 @@ Store layout (all parquet, partitioned by ingest batch id):
   ``seq`` (the batch id as a data column). The current head per user
   is the row with max seq — an argmax over per-user groups of a few
   rows, the classic merge-on-read head table. Superseded rows are
-  dead weight only until compaction (store.compact_tables merges
-  partitions; seq keeps argmax correct across compactions).
+  dead weight only until compaction (``compact_store`` folds all
+  three tables; seq keeps argmax correct across compactions).
 - ``<store>/late``: quarantined out-of-order arrivals (see below).
 
 Ordering contract: per user, events must arrive in (ts, event_id)
@@ -52,6 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 from .store import (
     StageTimer,
     append_partition,
+    compact_tables,
     guard_replay_after_compaction,
     open_scheme_store,
     read_store,
@@ -334,4 +335,16 @@ def start_scd2_ingest(
         checkpoint,
         lambda df, bid, run_id: scd2_ingest_batch(df, bid, store_dir, run_id=run_id),
         trigger_seconds=0,
+    )
+
+
+def compact_store(spark: SparkSession, store_dir: str) -> int:
+    """Crash-safe fold of the per-batch heads/closed/late partitions
+    into one ``ingest_batch=-1`` partition — see ``store.compact_tables``
+    for the quiescence and recovery contract; a replay of a folded
+    batch then refuses (``store.guard_replay_after_compaction``)."""
+    return compact_tables(
+        spark,
+        store_dir,
+        (("heads", _HEAD_SCHEMA), ("closed", _CLOSED_SCHEMA), ("late", _LATE_SCHEMA)),
     )

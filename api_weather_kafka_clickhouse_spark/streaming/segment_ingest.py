@@ -42,6 +42,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.text_analysis import SEG_TOKENS
 from .store import (
     append_partition,
+    collapse_ids,
     compact_tables,
     folded_upto,
     open_scheme_store,
@@ -88,13 +89,7 @@ def segment_ingest_batch(
     if batch_id <= folded_upto(spark, store_dir, "segs"):
         return  # replay of a folded batch: the fold holds its admissions
 
-    w = Window.partitionBy("doc_id").orderBy("text")
-    docs = (
-        batch.select("doc_id", "text", F.row_number().over(w).alias("_rn"))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
-    )
+    docs = collapse_ids(batch, "doc_id", "text").persist()
     try:
         segs = _exploded_segments(docs, seg_tokens).persist()
         try:

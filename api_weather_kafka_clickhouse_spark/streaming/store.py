@@ -1,7 +1,9 @@
-"""Shared persistent-store machinery for the incremental ingest
-modules (``dedup_ingest`` for text, ``embedding_ingest`` for
-vectors): batch-partitioned parquet tables with replay-aware reads
-and crash-safe compaction; plus every streaming wiring's query start
+"""Shared persistent-store machinery for every store-backed ingest
+module (dedup, embedding, segment, ER, SCD2, rollup, agg-state,
+centroid and cluster stores) and every streaming wiring, the weather
+warehouse and rollup included: batch-partitioned parquet tables with
+replay-aware reads, the duplicate-id collapse (``collapse_ids``),
+crash-safe compaction and the fold record; plus the query start
 (``start_foreach_batch``), run check and stage timer.
 
 Layout contract (per table): plain parquet, Hive-partitioned by the
@@ -217,6 +219,20 @@ def append_partition(df: DataFrame, path: str, batch_id: int) -> None:
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ingest_batch")
         .parquet(path)
+    )
+
+
+def collapse_ids(df: DataFrame, id_col: str, *cols: str) -> DataFrame:
+    """One row per ``id_col`` — the smallest ``cols`` tuple — so
+    producer-retry copies of an id (at-least-once delivery) collapse
+    deterministically before admission. ``min(struct)`` orders NULL
+    fields first, so a copy with a NULL payload wins. A hash aggregate,
+    not a row_number window: its map-side partial phase pre-reduces the
+    copies before the exchange instead of shuffling and sorting each."""
+    return (
+        df.groupBy(id_col)
+        .agg(F.min(F.struct(*cols)).alias("_t"))
+        .select(id_col, *[F.col(f"_t.{c}").alias(c) for c in cols])
     )
 
 

@@ -248,3 +248,28 @@ def test_embedding_pairs_log_and_incremental_clusters(spark, tmp_path):
         for r in dedup_ops.merge_components(empty, edges).collect()
     }
     assert labels == {(1, 1), (3, 1), (4, 4), (5, 4)}
+
+
+# (rows of one bad id) — each used to raise inside the band matmul,
+# and every replay raised again, so the one row wedged the stream
+_BAD_VECS = {
+    "null_vec": lambda i: [(i, None)],
+    "wrong_dim_vec": lambda i: [(i, [1.0] * 10)],
+    "dup_id_null_copy_wins": lambda i: [(i, V3), (i, None)],
+}
+
+
+@pytest.mark.parametrize("case", list(_BAD_VECS))
+def test_bad_vector_is_admitted_unindexed(spark, tmp_path, case):
+    """A vector that is NULL or not of the plane dimension gets no band
+    keys: it is admitted, never similarity-dropped, and the batch's
+    good rows are still deduped."""
+    store = str(tmp_path / "estore_bad")
+    out = str(tmp_path / "esurv_bad")
+    bad = _BAD_VECS[case]
+    embedding_ingest.embedding_ingest_batch(_mk(spark, [(1, V1), *bad(2)]), 0, store, out)
+    embedding_ingest.embedding_ingest_batch(_mk(spark, [(3, _near(V1)), *bad(4)]), 1, store, out)
+    survivors = {r.vec_id: r.vec for r in spark.read.parquet(out).collect()}
+    assert set(survivors) == {1, 2, 4}
+    assert survivors[2] == survivors[4] == bad(0)[-1][1]
+    assert {r.vec_id for r in spark.read.parquet(store + "/bands").collect()} == {1}

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from api_weather_kafka_clickhouse_spark.streaming import dedup_ingest
 from api_weather_kafka_clickhouse_spark.streaming.lsh_candidates import (
+    near_dup_pairs,
     vs_store_pairs,
     within_batch_pairs,
 )
@@ -70,6 +71,37 @@ def test_vs_store_bound_per_new_doc(spark):
     )
     assert vs_store_pairs(new, stored, "doc_id", cap=5).count() == 10
 
+
+
+def test_near_dup_pairs_store_and_batch_legs_predicate_decides(spark):
+    """The one verified-pair search: candidates re-attach each side's
+    value from its OWN frame, the predicate decides, batch pairs come
+    out id_a < id_b, and both legs are returned persisted."""
+    new = _bands(spark, [(10, 0, 7), (11, 1, 3), (12, 1, 3), (12, 2, 4), (10, 2, 4)])
+    stored = _bands(spark, [(1, 0, 7), (2, 0, 7), (3, 1, 9)])
+    values = spark.createDataFrame([(10, 100), (11, 300), (12, 301)], "doc_id bigint, v bigint")
+    stored_values = spark.createDataFrame([(1, 101), (2, 500), (3, 300)], "doc_id bigint, w bigint")
+    vs_store, in_batch = near_dup_pairs(
+        new,
+        stored,
+        values,
+        stored_values,
+        "doc_id",
+        lambda a, b: F.abs(F.col(a) - F.col(b)) <= 1,
+        cap=8,
+    )
+    try:
+        assert vs_store.columns == ["new_id", "old_id"]
+        assert in_batch.columns == ["id_a", "id_b"]
+        # (10, 2) is a candidate the predicate rejects; stored 3 shares
+        # no bucket with 11 although their values match
+        assert {tuple(r) for r in vs_store.collect()} == {(10, 1)}
+        # (10, 12) is a candidate the predicate rejects
+        assert {tuple(r) for r in in_batch.collect()} == {(11, 12)}
+        assert vs_store.is_cached and in_batch.is_cached
+    finally:
+        vs_store.unpersist()
+        in_batch.unpersist()
 
 def test_hot_duplicate_family_still_collapses_end_to_end(spark, tmp_path):
     """Ingesting a family of identical docs larger than the bucket cap

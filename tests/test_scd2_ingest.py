@@ -141,6 +141,33 @@ def test_scd2_stream_wiring_and_run_guard(spark, tmp_path):
 # ------------------------------------- property: fold == batch twin
 
 
+def test_scd2_compact_store_keeps_intervals_and_refuses_folded_replay(spark, tmp_path):
+    """``compact_store`` folds heads/closed/late (no caller needs the
+    private table schemas); the dimension reads the same after the
+    fold, and a replay of a folded batch refuses rather than
+    quarantining its own events to ``late``."""
+    import datetime
+
+    store = str(tmp_path / "scd2_cs")
+    schema = "event_id long, user_id long, event_type string, ts timestamp"
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(i, u, t, datetime.datetime(2024, 1, 1, 10, m)) for i, u, t, m in rows], schema
+        )
+
+    scd2_ingest.scd2_ingest_batch(batch([(1, 7, "view", 1), (2, 8, "view", 2)]), 0, store)
+    b1 = batch([(3, 7, "click", 3), (4, 8, "click", 4), (5, 7, "view", 0)])
+    scd2_ingest.scd2_ingest_batch(b1, 1, store)
+    before = _interval_set(scd2_ingest.read_intervals(spark, store))
+
+    assert scd2_ingest.compact_store(spark, store) == 3
+    assert _interval_set(scd2_ingest.read_intervals(spark, store)) == before
+    with pytest.raises(RuntimeError, match="compacted away"):
+        scd2_ingest.scd2_ingest_batch(b1, 1, store)
+    assert _interval_set(scd2_ingest.read_intervals(spark, store)) == before
+
+
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
