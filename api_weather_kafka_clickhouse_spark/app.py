@@ -27,7 +27,7 @@ from .plans.stage import live_checkpoint_dirs, reclaim_checkpoints, scoped_check
 from .sources.cities import assign_topics, load_cities, route_topic
 from .sources.flatten import flatten_weather, parse_raw
 from .sources.http_weather import FetchFn, fetch_weather
-from .sources.sink import write_fact
+from .sources.sink import read_fact, write_fact
 
 
 def run_batch_cycle(
@@ -139,7 +139,7 @@ def run_polling_loop(
 def warehouse_summary(spark: SparkSession, warehouse_path: str) -> DataFrame:
     """The §2-C query layer over the weather fact table itself:
     per city/month aggregates with partition pruning on event_month."""
-    fact = spark.read.parquet(warehouse_path)
+    fact = read_fact(spark, warehouse_path)
     return fact.groupBy("event_month", "city_name").agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.min("temperature").alias("t_min"),

@@ -26,10 +26,13 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from typing import NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.clickhouse import toYYYYMM
+from .schemas import WEATHER_FACT_SCHEMA
 
 MONTH_COL = "event_month"
 SORT_KEY = ("event_date", "city_name", "event_time")
@@ -84,8 +87,19 @@ def read_fact(spark: SparkSession, path: str) -> DataFrame:
     ``event_month`` — Spark does not derive a month predicate from an
     `event_date` filter (the functional relationship is unknown to
     Catalyst), so date-ranged readers must constrain event_month too;
-    use read_fact_between."""
-    return spark.read.parquet(path)
+    use read_fact_between.
+
+    A warehouse that exists but holds no data files yet (its stream has
+    seen only corrupt messages) reads as an empty frame of the fact
+    schema plus ``event_month``; an absent path (PATH_NOT_FOUND) and
+    every other read error still raise."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        month = T.StructField(MONTH_COL, T.IntegerType())
+        return spark.createDataFrame([], T.StructType(WEATHER_FACT_SCHEMA.fields + [month]))
 
 
 def read_fact_between(spark: SparkSession, path: str, start_date: str, end_date: str) -> DataFrame:
@@ -96,7 +110,7 @@ def read_fact_between(spark: SparkSession, path: str, start_date: str, end_date:
     partition + granule skipping parity."""
     months = (toYYYYMM(F.lit(start_date)), toYYYYMM(F.lit(end_date)))
     return (
-        spark.read.parquet(path)
+        read_fact(spark, path)
         .filter(F.col(MONTH_COL).between(*months))
         .filter(F.col("event_date").between(F.lit(start_date), F.lit(end_date)))
     )

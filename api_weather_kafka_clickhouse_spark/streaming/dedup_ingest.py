@@ -36,7 +36,9 @@ Dedup rule per new doc (deterministic):
   threshold (keep-lowest within the batch, one hop — the transitive
   closure over history is what the running store provides);
 - a short doc is dropped if its md5 is already stored, or a
-  smaller-id doc of the same batch shares it.
+  smaller-id doc of the same batch shares it. A NULL text is digested
+  as the empty text, so a re-delivered NULL-text doc is dropped too
+  (``md5(NULL)`` is NULL and would never match a stored digest).
 
 Candidate generation is BOUNDED per band bucket (lsh_candidates):
 signatures are signed with ``cap=None`` for batch-independence, so
@@ -204,7 +206,7 @@ def dedup_ingest_batch(
             # store and within the batch (keep-lowest id per digest)
             shorts = (
                 docs.join(sig.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", F.md5("text").alias("text_md5"))
+                .select("doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("text_md5"))
                 .persist()
             )
             try:

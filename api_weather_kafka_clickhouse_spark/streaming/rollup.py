@@ -15,7 +15,9 @@ supervisor restart) overwrites its own partition instead of
 double-appending — the idempotent-foreachBatch pattern the reference's
 commit-after-insert only approximates
 (reference app/Consumer_clickhouse.py:160-165, with ClickHouse's
-insert dedup explicitly disabled at app/clickhouse_db.py:23).
+insert dedup explicitly disabled at app/clickhouse_db.py:23). The
+store layer writes (append_partition), folds (fold_batches) and reads
+(read_store) the table, so an empty rollup reads as empty.
 """
 
 from __future__ import annotations
@@ -27,28 +29,35 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .store import (
-    crash_safe_rewrite,
+    append_partition,
+    fold_batches,
     fs_exists,
     hadoop_fs,
+    read_store,
     start_foreach_batch,
     verify_stream_run,
 )
 
 ROLLUP_KEYS = ("event_date", "city_name")
 
+_PARTIALS_SCHEMA = (
+    "event_date date, city_name string, n_obs bigint, t_sum decimal(38,2), "
+    "t_min decimal(5,2), t_max decimal(5,2)"
+)
 
-def _batch_partials(batch_df: DataFrame) -> DataFrame:
-    # t_sum is pinned to decimal(38,2) here AND in compact_rollup's
-    # re-aggregation: Spark's sum() widens precision by 10, so an
-    # unpinned compaction would write decimal(38,2) partitions next to
-    # the stream's decimal(28,2) ones and later un-merged reads would
-    # resolve an arbitrary footer (intermittent parquet conversion
-    # errors). One fixed type keeps every partition schema identical.
-    return batch_df.groupBy(*ROLLUP_KEYS).agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.sum(F.col("temperature").cast("decimal(18,2)")).cast("decimal(38,2)").alias("t_sum"),
-        F.min("temperature").alias("t_min"),
-        F.max("temperature").alias("t_max"),
+
+def _merge_partials(partials: DataFrame) -> DataFrame:
+    # The one partial merge: of one-row partials on the write path, of
+    # stored partials in the fold and on read. t_sum is pinned to
+    # decimal(38,2): Spark's sum() widens precision by 10, so an
+    # unpinned merge would write partitions of different decimal types
+    # and un-merged reads would resolve an arbitrary footer
+    # (intermittent parquet conversion errors).
+    return partials.groupBy(*ROLLUP_KEYS).agg(
+        F.sum("n_obs").alias("n_obs"),
+        F.sum("t_sum").cast("decimal(38,2)").alias("t_sum"),
+        F.min("t_min").alias("t_min"),
+        F.max("t_max").alias("t_max"),
     )
 
 
@@ -64,14 +73,15 @@ def start_rollup(
     def sink(batch_df: DataFrame, batch_id: int, run_id: str | None) -> None:
         has_state = fs_exists(batch_df.sparkSession, rollup_path)
         verify_stream_run(batch_df.sparkSession, rollup_path, run_id, has_state)
-        (
-            _batch_partials(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(rollup_path)
+        t = F.col("temperature")
+        rows = batch_df.select(
+            *ROLLUP_KEYS,
+            F.lit(1).alias("n_obs"),
+            t.cast("decimal(18,2)").alias("t_sum"),
+            t.alias("t_min"),
+            t.alias("t_max"),
         )
+        append_partition(_merge_partials(rows), rollup_path, batch_id, "batch_id")
 
     return start_foreach_batch(fact_stream, checkpoint, sink, trigger_seconds)
 
@@ -98,61 +108,30 @@ def _last_committed_batch(spark: SparkSession, checkpoint: str) -> int:
 
 
 def compact_rollup(spark: SparkSession, rollup_path: str, checkpoint: str) -> None:
-    """Merge committed batch partitions into one — run periodically
+    """Fold committed batch partitions into one — run periodically
     (or on stream shutdown) so a long-lived trigger doesn't
     accumulate one tiny partition per micro-batch and read_rollup
-    stays a scan of a few files.
+    stays a scan of a few files. It is the store layer's fold
+    (store.fold_batches) with the partial merge: crash-safe, with a
+    fold record (store.FOLD_RECORD), and empty in, empty out.
 
     Replay safety: only partitions with batch_id <= the checkpoint's
-    last COMMITTED batch are folded into the `batch_id=-1` compacted
-    partition; a batch that was written but not committed (crash
-    between sink and commit) keeps its own partition, so when the
-    restarted stream replays it, the dynamic overwrite replaces that
-    partition instead of double-counting against the compacted data.
-    OFFLINE maintenance: stop the rollup stream first — the directory
-    swap is not atomic with concurrent writes.
-
-    Crash safety is the store layer's shared swap
-    (store.crash_safe_rewrite): the compacted table is written to a
-    marked staging copy before the live directory moves, an
-    interrupted run is recovered on the next call, and copy+delete
-    object stores are refused before anything is touched.
+    last COMMITTED batch are folded into the `batch_id=-1` partition;
+    a batch that was written but not committed (crash between sink
+    and commit) keeps its own partition, so when the restarted stream
+    replays it, the dynamic overwrite replaces that partition instead
+    of double-counting against the folded data. OFFLINE maintenance:
+    stop the rollup stream first — the directory swap is not atomic
+    with concurrent writes.
     """
     committed = _last_committed_batch(spark, checkpoint)
-    # no trailing slash: the swap's staging/aside dirs are siblings
-    # named after the live path
-    live = rollup_path.rstrip("/")
-
-    def _write_compacted(tmp: str) -> None:
-        partials = spark.read.parquet(live)
-        foldable = partials.filter(F.col("batch_id") <= committed)
-        keep = partials.filter(F.col("batch_id") > committed)
-        (
-            foldable.groupBy(*ROLLUP_KEYS)
-            .agg(
-                F.sum("n_obs").alias("n_obs"),
-                # same fixed decimal as _batch_partials — see comment there
-                F.sum("t_sum").cast("decimal(38,2)").alias("t_sum"),
-                F.min("t_min").alias("t_min"),
-                F.max("t_max").alias("t_max"),
-            )
-            .withColumn("batch_id", F.lit(-1))
-            .unionByName(keep)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(tmp)
-        )
-
-    crash_safe_rewrite(spark, live, _write_compacted)
+    fold_batches(spark, rollup_path, _PARTIALS_SCHEMA, committed, _merge_partials, "batch_id")
 
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """Merge the partials: counts and exact decimal sums add, min/max
-    combine — identical to aggregating the fact table directly."""
-    partials = spark.read.parquet(rollup_path)
-    return partials.groupBy(*ROLLUP_KEYS).agg(
-        F.sum("n_obs").alias("n_obs"),
-        F.min("t_min").alias("t_min"),
-        F.max("t_max").alias("t_max"),
-        (F.sum("t_sum").cast("double") / F.sum("n_obs")).alias("t_avg"),
-    )
+    combine — identical to aggregating the fact table directly. An
+    empty rollup reads as zero rows."""
+    merged = _merge_partials(read_store(spark, rollup_path, _PARTIALS_SCHEMA))
+    t_avg = (F.col("t_sum").cast("double") / F.col("n_obs")).alias("t_avg")
+    return merged.select(*ROLLUP_KEYS, "n_obs", "t_min", "t_max", t_avg)

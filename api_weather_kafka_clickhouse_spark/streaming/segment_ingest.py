@@ -83,7 +83,9 @@ def segment_ingest_batch(
     segments, index the first-seen segment hashes. ``batch`` needs
     (doc_id bigint, text string). ``run_id`` rejects a recreated
     checkpoint over a kept store before any write (see
-    store.RUN_FILE)."""
+    store.RUN_FILE). A doc whose text is NULL writes NO output row (its
+    NULL token array explodes to no segment), unlike a fully-seen
+    doc, which writes one with ``n_kept = 0``."""
     spark = batch.sparkSession
     open_scheme_store(spark, store_dir, SEG_SCHEME, ("segs",), run_id)
     if batch_id <= folded_upto(spark, store_dir, "segs"):

@@ -10,8 +10,8 @@ Layout contract (per table): plain parquet, Hive-partitioned by the
 ingest batch id (``ingest_batch=<n>``), so a replayed micro-batch
 overwrites its own partition — the idempotent-foreachBatch pattern of
 sources/sink.py. A long-running deployment accumulates one (tiny)
-partition dir per micro-batch; ``compact_tables`` folds the history
-into a single ``ingest_batch=-1`` partition at a quiescent point.
+partition dir per micro-batch; ``fold_batches`` folds the history
+into a single ``ingest_batch=-1`` partition.
 """
 
 from __future__ import annotations
@@ -209,15 +209,15 @@ def read_store(
     return spark.createDataFrame([], schema)
 
 
-def append_partition(df: DataFrame, path: str, batch_id: int) -> None:
-    """Write ``df`` as the store partition for ``batch_id`` — dynamic
-    partition overwrite, so a replayed batch rewrites its own
-    partition instead of double-appending."""
+def append_partition(df: DataFrame, path: str, batch_id: int, batch_col: str = "ingest_batch") -> None:
+    """Write ``df`` as the partition ``<batch_col>=<batch_id>`` (stores:
+    ``ingest_batch``, weather rollup: ``batch_id``) — dynamic partition
+    overwrite, so a replayed batch rewrites its own partition."""
     (
-        df.withColumn("ingest_batch", F.lit(batch_id))
+        df.withColumn(batch_col, F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
+        .partitionBy(batch_col)
         .parquet(path)
     )
 
@@ -243,21 +243,21 @@ def compact_tables(
     transform=None,
 ) -> int:
     """Fold each table's one-partition-per-batch history into a single
-    ``ingest_batch=-1`` partition; returns how many tables were
-    rewritten. ``transform`` (optional, df -> df, schema-preserving)
-    is applied to each table's merged rows before the rewrite — the
-    hook summing/aggregating stores use to MERGE rows during
-    compaction (rollup_store) instead of carrying them verbatim; it
-    shares this function's crash protocol instead of duplicating it.
+    ``ingest_batch=-1`` partition through ``fold_batches``; returns how
+    many tables were rewritten. ``transform`` (df -> df,
+    schema-preserving) is the fold's merge, which summing stores use
+    to MERGE rows instead of carrying them verbatim.
 
-    MUST run at a QUIESCENT point: no in-flight batch, no pending
-    replay (the swap below briefly moves the table aside, and a
-    concurrent batch reading a missing store would dedup against
-    nothing). Replay after compaction: a batch id at or below the
-    table's FOLD_RECORD (``folded_upto``) is already inside the
-    compacted partition, so the summing and head-delta stores refuse
-    it (``guard_replay_after_compaction``) and the dedup, embedding
-    and segment stores return before any write.
+    The stores fold EVERY listed batch, so this MUST run at a QUIESCENT
+    point: no in-flight batch, no pending replay (the swap below
+    briefly moves the table aside, and a concurrent batch reading a
+    missing store would dedup against nothing). A replay at or below
+    the table's FOLD_RECORD (``folded_upto``) is inside the fold, so
+    the summing and head-delta stores refuse it
+    (``guard_replay_after_compaction``) and the dedup, embedding and
+    segment stores return before any write. The weather rollup's fold
+    (``rollup.compact_rollup``) stops at its checkpoint's last
+    COMMITTED batch instead, so a replay overwrites its own partition.
 
     Crash safety protocol (per table):
 
@@ -294,29 +294,48 @@ def compact_tables(
     raises on known copy+delete schemes before any table is touched;
     object-store deployments should rebuild from replay instead.
     """
-    rewritten = 0
-    for sub, schema in tables:
-        path = os.path.join(store_dir, sub)
+    return sum(
+        fold_batches(spark, os.path.join(store_dir, sub), schema, merge=transform)
+        for sub, schema in tables
+    )
 
-        def _write_compacted(tmp: str) -> None:  # called within this iteration
-            fs, p = hadoop_fs(spark, path)
-            names = [st.getPath().getName() for st in fs.listStatus(p)]
-            ids = [int(n.split("=", 1)[1]) for n in names if n.startswith("ingest_batch=")]
-            upto = max(ids + [folded_upto(spark, store_dir, sub)])
-            df = read_store(spark, path, schema)
-            if transform is not None:
-                df = transform(df)
-            (
-                df.withColumn("ingest_batch", F.lit(COMPACTED_BATCH_ID))
-                .write.mode("overwrite")
-                .partitionBy("ingest_batch")
-                .parquet(tmp)
-            )
-            write_small_text(spark, os.path.join(tmp, FOLD_RECORD), str(upto))
 
-        if crash_safe_rewrite(spark, path, _write_compacted):
-            rewritten += 1
-    return rewritten
+def fold_batches(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    upto: int | None = None,
+    merge=None,
+    batch_col: str = "ingest_batch",
+) -> bool:
+    """The one fold of a batch-partitioned table, through
+    ``crash_safe_rewrite`` (False when ``path`` does not exist): the
+    earlier fold and the ``<batch_col>=N`` partitions with N <= ``upto``
+    (all when None) go into ``<batch_col>=-1`` through ``merge`` (df ->
+    df, schema-preserving), later ones are copied, and the FOLD_RECORD
+    goes into the staging copy. An empty table folds to an empty one."""
+    path = path.rstrip("/")  # the swap's siblings are named after it
+
+    def _write_folded(tmp: str) -> None:
+        fs, p = hadoop_fs(spark, path)
+        names = [st.getPath().getName() for st in fs.listStatus(p)]
+        ids = [int(n.split("=", 1)[1]) for n in names if n.startswith(f"{batch_col}=")]
+        bound = max(ids, default=COMPACTED_BATCH_ID) if upto is None else upto
+        rows = read_store(spark, path, f"{schema}, {batch_col} int")  # keeps batch_col
+        folded = rows.filter(F.col(batch_col) <= bound).drop(batch_col)
+        if merge is not None:
+            folded = merge(folded)
+        (
+            folded.withColumn(batch_col, F.lit(COMPACTED_BATCH_ID))
+            .unionByName(rows.filter(F.col(batch_col) > bound))
+            .write.mode("overwrite")
+            .partitionBy(batch_col)
+            .parquet(tmp)
+        )
+        prior = folded_upto(spark, os.path.dirname(path), os.path.basename(path))
+        write_small_text(spark, os.path.join(tmp, FOLD_RECORD), str(max(bound, prior)))
+
+    return crash_safe_rewrite(spark, path, _write_folded)
 
 
 def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
@@ -325,10 +344,10 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
     and filesystem requirements are documented (and proven) in the
     compact_tables docstring above. Callers:
 
-    - ``compact_tables`` (the dedup_ingest, embedding_ingest,
-      segment_ingest, agg_store and rollup_store compactions), one
-      call per table;
-    - ``streaming/rollup.compact_rollup``, the weather rollup fold;
+    - ``fold_batches``, the one fold of a batch-partitioned table:
+      every ``compact_tables`` table (the dedup, embedding, segment,
+      scd2, agg_store and rollup_store compactions) and the weather
+      rollup (``streaming/rollup.compact_rollup``);
     - ``sources/sink.optimize_fact`` and the per-leaf rewrite loop
       behind ``sink.delete_fact``, ``sink.upsert_fact`` and the
       boundary month of ``sink.ttl_expire``, one call per rewritten
@@ -580,7 +599,7 @@ def open_scheme_store(
 # --- replay after a fold --------------------------------------------
 
 # The highest ingest batch id a fold holds (a MergeTree part name's
-# block range): compact_tables writes it into the staging copy, so it
+# block range): fold_batches writes it into the staging copy, so it
 # goes live with the fold; "_" keeps it out of every scan and walk.
 FOLD_RECORD = "_FOLDED_UPTO"
 
